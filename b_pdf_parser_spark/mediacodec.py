@@ -97,8 +97,6 @@ __all__ = [
     "alaw_expand",
     "encode_gif",
     "decode_gif",
-    "encode_gif_frames",
-    "decode_gif_frames",
     "encode_tiff",
     "decode_tiff",
     "ulaw_expand",
@@ -1132,175 +1130,6 @@ def decode_gif(data: bytes) -> Tuple[int, int, int, bytes]:
             out[3 * k], out[3 * k + 1], out[3 * k + 2] = pal[v]
         return w, h, 3, bytes(out)
     raise ValueError("GIF contains no image descriptor")
-
-
-def encode_gif_frames(
-    width: int,
-    height: int,
-    palette: List[Tuple[int, int, int]],
-    bg_index: int,
-    frames: List[dict],
-) -> bytes:
-    """ANIMATED GIF89a writer: NETSCAPE2.0 looping application extension +
-    per-frame graphic control extensions. Each frame dict:
-    ``{left, top, w, h, indices, disposal, delay_cs,
-    transparent (index or None), palette (local, or None)}``. The same
-    sub-block/LZW machinery as :func:`encode_gif`."""
-    psize = len(palette)
-    if psize < 2 or psize & (psize - 1):
-        raise ValueError("palette length must be a power of two in [2, 256]")
-    depth = psize.bit_length() - 1
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", width, height)
-    out += bytes((0x80 | ((depth - 1) & 7) << 4 | (depth - 1) & 7,
-                  bg_index, 0))
-    for r, g, b in palette:
-        out += bytes((r, g, b))
-    out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
-    for f in frames:
-        w, h = f["w"], f["h"]
-        if len(f["indices"]) != w * h:
-            raise ValueError("frame index buffer does not match its rect")
-        t = f.get("transparent")
-        gce_flags = (f["disposal"] & 7) << 2 | (1 if t is not None else 0)
-        out += bytes((0x21, 0xF9, 4, gce_flags))
-        out += struct.pack("<H", f.get("delay_cs", 0))
-        out += bytes((t if t is not None else 0, 0))
-        out += b"\x2c" + struct.pack(
-            "<HHHH", f["left"], f["top"], w, h
-        )
-        lpal = f.get("palette")
-        if lpal is not None:
-            n = len(lpal)
-            if n < 2 or n & (n - 1):
-                raise ValueError("local palette length must be a power of 2")
-            ldepth = n.bit_length() - 1
-            out += bytes((0x80 | (ldepth - 1) & 7,))
-            for r, g, b in lpal:
-                out += bytes((r, g, b))
-            mcs = max(2, ldepth)
-        else:
-            out += b"\x00"
-            mcs = max(2, depth)
-        out.append(mcs)
-        comp = _gif_lzw_compress(f["indices"], mcs)
-        for off in range(0, len(comp), 255):
-            block = comp[off : off + 255]
-            out.append(len(block))
-            out += block
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-@_fail_loud
-def decode_gif_frames(data: bytes) -> Tuple[int, int, List[dict]]:
-    """ANIMATED GIF decode with full inter-frame composition — disposal
-    methods 0/1 (leave), 2 (restore background color over the frame rect)
-    and 3 (restore the canvas state from before the frame drew),
-    transparency (index pixels leave the canvas unchanged) and local color
-    tables, per GIF89a + the de-facto NETSCAPE loop semantics. The canvas
-    initializes to the global background color. → ``(sw, sh, frames)``
-    where each frame is ``{delay_cs, disposal, rgb}`` with ``rgb`` the
-    FULL-CANVAS top-down snapshot after the frame draws (what a player
-    shows)."""
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    sw, sh = struct.unpack("<HH", data[6:10])
-    packed, bg_idx = data[10], data[11]
-    pos = 13
-    gct: List[Tuple[int, int, int]] = []
-    if packed & 0x80:
-        n = 2 << (packed & 7)
-        for j in range(n):
-            o = pos + 3 * j
-            gct.append((data[o], data[o + 1], data[o + 2]))
-        pos += 3 * n
-    _check_pixel_budget(sw * sh * 3)
-    bg = gct[bg_idx] if gct and bg_idx < len(gct) else (0, 0, 0)
-    canvas = bytearray(bg * (sw * sh)) if len(bg) == 3 else bytearray(sw * sh * 3)
-    frames: List[dict] = []
-    total_px = 0
-    delay_cs = 0
-    disposal = 0
-    transparent: Optional[int] = None
-    while pos < len(data):
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:
-            break
-        if block == 0x21:
-            label = data[pos]
-            pos += 1
-            if label == 0xF9 and data[pos] >= 4:
-                flags = data[pos + 1]
-                disposal = (flags >> 2) & 7
-                delay_cs = struct.unpack("<H", data[pos + 2 : pos + 4])[0]
-                transparent = data[pos + 4] if flags & 1 else None
-            while data[pos]:
-                pos += 1 + data[pos]
-            pos += 1
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{block:02x}")
-        left, top, w, h = struct.unpack("<HHHH", data[pos : pos + 8])
-        if left + w > sw or top + h > sh:
-            raise ValueError("GIF frame rect exceeds the logical screen")
-        flags = data[pos + 8]
-        pos += 9
-        pal = gct
-        if flags & 0x80:
-            n = 2 << (flags & 7)
-            pal = [
-                (data[pos + 3 * j], data[pos + 3 * j + 1], data[pos + 3 * j + 2])
-                for j in range(n)
-            ]
-            pos += 3 * n
-        if not pal:
-            raise ValueError("GIF frame has no color table")
-        total_px += w * h
-        _check_pixel_budget(total_px * 3)
-        mcs = data[pos]
-        pos += 1
-        comp = bytearray()
-        while data[pos]:
-            ln = data[pos]
-            comp += data[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        idx = _gif_lzw_decompress(bytes(comp), mcs, w * h)
-        if flags & 0x40:
-            ordered = bytearray(w * h)
-            for src, y in enumerate(_gif_interlace_order(h)):
-                ordered[y * w : (y + 1) * w] = idx[src * w : (src + 1) * w]
-            idx = bytes(ordered)
-        saved = bytes(canvas) if disposal == 3 else None
-        for k, v in enumerate(idx):
-            if v == transparent:
-                continue
-            if v >= len(pal):
-                raise ValueError("GIF palette index out of range")
-            x = left + k % w
-            y = top + k // w
-            o = 3 * (y * sw + x)
-            canvas[o], canvas[o + 1], canvas[o + 2] = pal[v]
-        frames.append({
-            "delay_cs": delay_cs,
-            "disposal": disposal,
-            "rgb": bytes(canvas),
-        })
-        if disposal == 2:
-            for y in range(top, top + h):
-                o = 3 * (y * sw + left)
-                canvas[o : o + 3 * w] = bytes(bg) * w
-        elif disposal == 3 and saved is not None:
-            canvas[:] = saved
-        delay_cs = 0
-        disposal = 0
-        transparent = None
-    if not frames:
-        raise ValueError("GIF contains no image descriptor")
-    return sw, sh, frames
 
 
 # ---------------------------------------------------------------------------

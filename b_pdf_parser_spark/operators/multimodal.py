@@ -13,9 +13,8 @@ Decode status, honestly labeled per format:
   sums from the generating formulas), and CCITT Group 4 fax (ITU-T T.6)
   via ``b_pdf_parser_spark.ccittcodec`` (2D mode coding over the T.4 run
   alphabets — lossless, so its features are exact by construction).
-  ``pdf_jpeg_pixel_features`` / ``pdf_ccitt_pixel_features`` close the
-  loop with the PDF walk: DCTDecode / CCITTFaxDecode image XObjects
-  decode to pixels.
+  ``pdf_ccitt_pixel_features`` closes the loop with the PDF walk:
+  CCITTFaxDecode image XObjects decode to pixels.
 * **STUBBED**: compressed VIDEO needs decoders we haven't built or the
   absent native libs (PIL/ffmpeg/opencv are not in this runtime) —
   those payloads land in the ``error`` column, never crash the batch.
@@ -39,7 +38,6 @@ import struct
 from typing import Iterator, Optional
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 __all__ = [
@@ -49,13 +47,10 @@ __all__ = [
     "encode_fake_media",
     "synth_media_df",
     "decode_features",
-    "frame_sample",
     "synth_real_media_df",
     "real_media_features",
     "synth_imagedoc_df",
     "pdf_image_features",
-    "synth_jpegdoc_df",
-    "pdf_jpeg_pixel_features",
 ]
 
 MEDIA_SCHEMA_DDL = "media_id BIGINT, kind STRING, payload BINARY"
@@ -183,30 +178,6 @@ def decode_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=FEATURES_SCHEMA_DDL)
-
-
-def frame_sample(media: DataFrame, every: int = 2) -> DataFrame:
-    """Treat each pixel-row of a 'vid' payload as a frame; emit every k-th
-    frame's byte offset + length (the video-sampling plumbing, sans codec)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for i, k, p in zip(b["media_id"], b["kind"], b["payload"]):
-                if k != "vid" or not p or p[:4] != _MAGIC:
-                    continue
-                w = int.from_bytes(p[7:9], "big")
-                h = int.from_bytes(p[9:11], "big")
-                ch = p[11]
-                frame_len = w * ch
-                for f in range(0, h, every):
-                    out.append({
-                        "media_id": int(i), "frame": f,
-                        "offset": 12 + f * frame_len, "length": frame_len,
-                    })
-            yield pd.DataFrame(out, columns=["media_id", "frame", "offset", "length"])
-
-    return media.mapInPandas(run, schema="media_id BIGINT, frame INT, offset BIGINT, length INT")
 
 
 # ---------------------------------------------------------------------------
@@ -674,186 +645,6 @@ def synth_real_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     return base.mapInPandas(gen, schema=MEDIA_SCHEMA_DDL)
 
 
-def avi_media_dims(i: int) -> dict:
-    """Generating formulas for AVI video doc ``i`` in the frame-sampling
-    corpus — GRAYSCALE flat-block frames only (the color fixed-point
-    chain is already pinned by the ``v0`` stratum of
-    ``real_media_decode``; this corpus exists to oracle the SAMPLING
-    semantics, so it keeps the per-frame value a one-line formula):
-    ``4 + i%5`` frames of ``8*(1+i%3) × 8*(1+(i//3)%2)`` pixels, frame
-    ``f`` pixel value ``(i*31 + f*53 + b*17) % 256`` for 8×8 block
-    ``b``, fps ``10 + (i%3)*5``."""
-    return {
-        "w": 8 * (1 + i % 3), "h": 8 * (1 + (i // 3) % 2),
-        "nf": 4 + i % 5, "fps": 10 + (i % 3) * 5,
-    }
-
-
-def encode_avi_media(i: int) -> bytes:
-    from ..avicodec import encode_avi_mjpeg
-    from ..jpegcodec import QUANT_CHROMA, QUANT_LUM
-
-    d = avi_media_dims(i)
-    q8 = ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
-    frames = [_jpeg_flat_pixels(i, d["w"], d["h"], 1, f=f)
-              for f in range(d["nf"])]
-    return encode_avi_mjpeg(d["w"], d["h"], 1, frames,
-                            fps=d["fps"], qtables=q8)
-
-
-def synth_avi_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    base = spark.range(0, n, 1, num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                {"media_id": int(i), "kind": "mjpeg",
-                 "payload": encode_avi_media(int(i))}
-                for i in b["id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
-
-    return base.mapInPandas(gen, schema=MEDIA_SCHEMA_DDL)
-
-
-AVI_FRAME_SCHEMA_DDL = (
-    "media_id BIGINT, frame_idx INT, width INT, height INT, fps INT, "
-    "n_values BIGINT, value_sum BIGINT, weighted_sum BIGINT"
-)
-
-
-def avi_frame_features(media: DataFrame, every: int = 2) -> DataFrame:
-    """REAL video frame sampling: decode every ``every``-th MJPEG frame
-    of each AVI payload (``avicodec.sample_avi_frames`` — unsampled
-    frames' JPEG decode is skipped entirely, the saving that matters at
-    video scale) and reduce each sampled frame to exact integer features
-    one row per (video, frame). Same single-Arrow-batch-dispatch shape
-    as the other media operators; a malformed payload fails the batch
-    loud (this corpus is writer-emitted, so an error column would only
-    hide generator bugs)."""
-    from ..avicodec import sample_avi_frames
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                w, h, fps, sampled = sample_avi_frames(bytes(payload), every=every)
-                for fidx, (fw, fh, fch, px) in sampled:
-                    vals = memoryview(px)
-                    rows.append({
-                        "media_id": int(mid), "frame_idx": int(fidx),
-                        "width": fw, "height": fh, "fps": fps,
-                        "n_values": len(vals),
-                        "value_sum": int(sum(vals)),
-                        "weighted_sum": int(sum((k + 1) * v
-                                             for k, v in enumerate(vals))),
-                    })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "width", "height", "fps",
-                         "n_values", "value_sum", "weighted_sum"],
-            )
-
-    return media.mapInPandas(run, schema=AVI_FRAME_SCHEMA_DDL)
-
-
-def tiff_media_dims(i: int) -> dict:
-    """Generating formulas for TIFF doc ``i`` — shared by the corpus
-    builder and the DuckDB oracle. Docs ``i < 60`` rotate four strata:
-    G4 fax in both byte orders (single- and multi-strip; bi-level
-    pattern ``white iff (x//3 + y//2 + i) % 5 < 3``) and uncompressed
-    8-bit gray / 24-bit RGB (``v[k] = (i*31 + k*7) % 251``). Docs
-    ``60 <= i < 90`` are the Compression=5 (TIFF 6.0 §13 LZW) extension —
-    gray without predictor, RGB with Predictor 2 horizontal
-    differencing, gray with Predictor 2 — alternating byte orders; the
-    pixel values keep the same byte-ramp formula, so LZW + predictor
-    are pure decode-path hazards under an unchanged value oracle. Docs
-    ``i >= 90`` are Compression=3 (CCITT G3) fax strips — 1-D
-    little-endian and 2-D (T4Options bit 0) big-endian alternating —
-    with the SAME bi-level pattern as the G4 strata, so the G3 per-strip
-    restart and EOL/tag framing are the hazards under the shared fax
-    formula."""
-    if i >= 90:
-        return {
-            "w": 9 + i % 8,
-            "h": 7 + i % 6,
-            "kind": ("g3_1d", "g3_2d")[i % 2],
-            "ch": 1,
-            "big_endian": i % 2 == 1,
-            "compression": 3,
-            "predictor": 1,
-            "g3_2d": i % 2 == 1,
-            "rows_per_strip": (None, 3, 5)[(i // 4) % 3],
-        }
-    if i >= 60:
-        st = i % 3
-        return {
-            "w": 9 + i % 8,
-            "h": 7 + i % 6,
-            "kind": ("lzwgray", "lzwrgb2", "lzwgray2")[st],
-            "ch": 3 if st == 1 else 1,
-            "big_endian": (i // 3) % 2 == 1,
-            "compression": 5,
-            "predictor": 1 if st == 0 else 2,
-            "rows_per_strip": (None, 3, 5)[(i // 4) % 3],
-        }
-    kind = i % 4
-    d = {
-        "w": 9 + i % 8,
-        "h": 7 + i % 6,
-        "kind": ("g4le", "g4be", "gray", "rgb")[kind],
-        "ch": 3 if kind == 3 else 1,
-        "big_endian": kind in (1, 3),
-        "compression": 4 if kind in (0, 1) else 1,
-        "predictor": 1,
-        # rotate strip layout: whole-image and small multi-row strips
-        "rows_per_strip": (None, 3, 5)[(i // 4) % 3],
-    }
-    return d
-
-
-def encode_tiff_media(i: int) -> bytes:
-    """Real TIFF payload for doc ``i`` (pure function, no RNG)."""
-    from ..mediacodec import encode_tiff
-
-    d = tiff_media_dims(i)
-    w, h, ch = d["w"], d["h"], d["ch"]
-    if d["compression"] in (3, 4):
-        px = bytes(
-            255 if ((x // 3 + y // 2 + i) % 5) < 3 else 0
-            for y in range(h)
-            for x in range(w)
-        )
-    else:
-        px = bytes((i * 31 + k * 7) % 251 for k in range(w * h * ch))
-    return encode_tiff(
-        w, h, ch, px,
-        compression=d["compression"],
-        big_endian=d["big_endian"],
-        rows_per_strip=d["rows_per_strip"],
-        predictor=d["predictor"],
-        g3_2d=d.get("g3_2d", False),
-    )
-
-
-def synth_tiff_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    base = spark.range(0, n, 1, num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                {
-                    "media_id": int(i),
-                    "kind": tiff_media_dims(int(i))["kind"],
-                    "payload": encode_tiff_media(int(i)),
-                }
-                for i in b["id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
-
-    return base.mapInPandas(gen, schema=MEDIA_SCHEMA_DDL)
-
-
 def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
     from ..jpegcodec import decode_jpeg
     from ..mediacodec import (
@@ -1043,7 +834,7 @@ def pdf_image_features(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PDF × JPEG: decode DCTDecode image XObjects with the from-scratch codec
+# PDF × CCITT: decode CCITTFaxDecode image XObjects with the from-scratch codec
 # ---------------------------------------------------------------------------
 
 JPEG_PIX_SCHEMA_DDL = (
@@ -1051,236 +842,6 @@ JPEG_PIX_SCHEMA_DDL = (
     "channels INT, n_values BIGINT, value_sum BIGINT, weighted_sum BIGINT, "
     "error STRING"
 )
-
-
-def _jpeg_xobject_dims(i: int, j: int) -> dict:
-    """Generating formulas for embedded JPEG ``j`` of doc ``i`` — shared
-    by the corpus builder and the DuckDB oracle. Pixel seed ``s = i*13 +
-    j*7`` feeds the same flat-block formula as the real-media corpus."""
-    return {
-        "w": 8 * (1 + (i + j) % 3),
-        "h": 8 * (1 + j % 2),
-        "ch": (1, 3)[(i + j) % 2],
-        "restart": (0, 2, 3)[(i + j) % 3],
-        # progressive SOF2 on half the restart-free XObjects (decoded
-        # pixels — and hence the oracle formulas — are identical)
-        "prog": (i + j) % 3 == 0 and i % 2 == 0,
-        "seed": i * 13 + j * 7,
-    }
-
-
-def synth_jpegdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    """``n`` deterministic PDFs, each embedding ``i % 3`` REAL JPEGs
-    (flat 8×8 blocks, DC quant 8 — the bit-exact stratum; baseline SOF0
-    with restart rotation + progressive SOF2 on half the restart-free
-    slots) as /DCTDecode image XObjects, plus one pseudo-byte CCITT
-    decoy per doc
-    so a filter-routing bug (decoding the wrong stream) breaks the
-    oracle with an error row instead of passing silently."""
-    base = spark.range(0, n, 1, num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from b_pdf_parser_spark.jpegcodec import (
-            QUANT_CHROMA, QUANT_LUM, encode_jpeg, encode_jpeg_progressive,
-        )
-        from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
-
-        q8 = ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
-        for b in batches:
-            rows = []
-            for raw in b["id"]:
-                i = int(raw)
-                spans = [[(40.0, 700.0, f"jpeg doc {i}")]]
-                imgs = []
-                for j in range(i % 3):
-                    d = _jpeg_xobject_dims(i, j)
-                    px = _jpeg_flat_pixels(d["seed"], d["w"], d["h"], d["ch"])
-                    if d["prog"]:
-                        payload = encode_jpeg_progressive(
-                            d["w"], d["h"], d["ch"], px, qtables=q8,
-                        )
-                    else:
-                        payload = encode_jpeg(
-                            d["w"], d["h"], d["ch"], px,
-                            qtables=q8, restart_interval=d["restart"],
-                        )
-                    imgs.append({
-                        "page": 0, "width": d["w"], "height": d["h"],
-                        "filter": "DCTDecode", "data": payload,
-                    })
-                imgs.append(make_image(0, 16, 8, "CCITTFaxDecode", seed=i))
-                rows.append({
-                    "doc_id": i,
-                    "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
-                })
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
-
-    return base.mapInPandas(gen, schema=IMAGEDOC_SCHEMA_DDL)
-
-
-def pdf_jpeg_pixel_features(docs: DataFrame) -> DataFrame:
-    """PDF walk → DCTDecode image XObject streams → REAL JPEG decode →
-    exact integer pixel features per embedded image. Two from-scratch
-    subsystems meet: ``pdfmodel`` surfaces the encoded stream bytes,
-    ``jpegcodec`` turns them into canonical pixels; non-DCT images are
-    routed past the codec (inventory only, no row here). One Arrow-batch
-    Python dispatch per document."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from b_pdf_parser_spark.jpegcodec import decode_jpeg
-        from b_pdf_parser_spark.pdfmodel import image_inventory
-
-        cols = ["doc_id", "page", "name", "width", "height", "channels",
-                "n_values", "value_sum", "weighted_sum", "error"]
-        for b in batches:
-            rows = []
-            for did, pdf in zip(b["doc_id"], b["pdf"]):
-                try:
-                    for rec in image_inventory(bytes(pdf), with_data=True):
-                        if rec["filter"] != "DCTDecode":
-                            continue
-                        w, h, ch, px = decode_jpeg(rec["data"])
-                        vals = list(px)
-                        if (w, h) != (rec["width"], rec["height"]):
-                            raise ValueError(
-                                f"XObject dims {rec['width']}x{rec['height']}"
-                                f" != JPEG dims {w}x{h}"
-                            )
-                        rows.append({
-                            "doc_id": int(did), "page": rec["page"],
-                            "name": rec["name"], "width": w, "height": h,
-                            "channels": ch, "n_values": len(vals),
-                            "value_sum": int(sum(vals)),
-                            "weighted_sum": int(
-                                sum((k + 1) * v for k, v in enumerate(vals))
-                            ),
-                            "error": None,
-                        })
-                except Exception as e:  # corrupt doc/stream → error row
-                    rows.append({
-                        "doc_id": int(did), "page": -1, "name": "",
-                        "width": None, "height": None, "channels": None,
-                        "n_values": None, "value_sum": None,
-                        "weighted_sum": None,
-                        "error": f"{type(e).__name__}: {e}",
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(run, schema=JPEG_PIX_SCHEMA_DDL)
-
-
-def _jpx_xobject_dims(i: int, j: int) -> dict:
-    """Generating formulas for embedded JPEG 2000 image ``j`` of doc
-    ``i`` — shared by the corpus builder and the DuckDB oracle. The
-    pixel at (x, y, channel c) is ``(s + 7x + 11y + 97c) % 256`` with
-    seed ``s = i*13 + j*7``; the 5/3+MQ path is LOSSLESS so the decoded
-    samples ARE the formula (no quantization argument needed).
-    ``levels`` rotates 0/1/2 wavelet decompositions — the decoded pixels
-    are identical across levels, so the oracle is level-independent
-    while the transform/packet routing is pinned (the same cheap hazard
-    trick as the CCITT /K rotation)."""
-    return {
-        "w": 6 + (i * 5 + j * 3) % 19,
-        "h": 5 + (i * 2 + j) % 14,
-        "ch": (1, 3)[(i + j) % 2],
-        "levels": (i + j) % 3,
-        "seed": i * 13 + j * 7,
-    }
-
-
-def _jpx_pixels(s: int, w: int, h: int, ch: int) -> bytes:
-    return bytes(
-        (s + 7 * x + 11 * y + 97 * c) % 256
-        for y in range(h) for x in range(w) for c in range(ch)
-    )
-
-
-def synth_jpxdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    """``n`` deterministic PDFs, each embedding ``i % 3`` REAL JPEG 2000
-    codestreams (from-scratch ``jpxcodec``: MQ coder, EBCOT Tier-1,
-    reversible 5/3 — lossless) as /JPXDecode image XObjects with the
-    wavelet level count rotating 0/1/2, plus one pseudo-byte DCTDecode
-    decoy per doc so a filter-routing bug (running the wrong codec over
-    the wrong stream) breaks the oracle with an error row instead of
-    passing silently."""
-    base = spark.range(0, n, 1, num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from b_pdf_parser_spark.jpxcodec import encode_jpx
-        from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
-
-        for b in batches:
-            rows = []
-            for raw in b["id"]:
-                i = int(raw)
-                spans = [[(40.0, 700.0, f"jpx doc {i}")]]
-                imgs = []
-                for j in range(i % 3):
-                    d = _jpx_xobject_dims(i, j)
-                    px = _jpx_pixels(d["seed"], d["w"], d["h"], d["ch"])
-                    imgs.append({
-                        "page": 0, "width": d["w"], "height": d["h"],
-                        "filter": "JPXDecode",
-                        "data": encode_jpx(d["w"], d["h"], d["ch"], px,
-                                           levels=d["levels"]),
-                    })
-                imgs.append(make_image(0, 16, 8, "DCTDecode", seed=i))
-                rows.append({
-                    "doc_id": i,
-                    "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
-                })
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
-
-    return base.mapInPandas(gen, schema=IMAGEDOC_SCHEMA_DDL)
-
-
-def pdf_jpx_pixel_features(docs: DataFrame) -> DataFrame:
-    """PDF walk → /JPXDecode XObject streams → REAL JPEG 2000 decode →
-    exact integer pixel features per embedded image (lossless path, so
-    the features are exact by construction). Non-JPX images are routed
-    past the codec. One Arrow-batch Python dispatch per document."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from b_pdf_parser_spark.jpxcodec import decode_jpx
-        from b_pdf_parser_spark.pdfmodel import image_inventory
-
-        cols = ["doc_id", "page", "name", "width", "height", "channels",
-                "n_values", "value_sum", "weighted_sum", "error"]
-        for b in batches:
-            rows = []
-            for did, pdf in zip(b["doc_id"], b["pdf"]):
-                try:
-                    for rec in image_inventory(bytes(pdf), with_data=True):
-                        if rec["filter"] != "JPXDecode":
-                            continue
-                        w, h, ch, px = decode_jpx(rec["data"])
-                        if (w, h) != (rec["width"], rec["height"]):
-                            raise ValueError(
-                                f"XObject dims {rec['width']}x{rec['height']}"
-                                f" != JPX dims {w}x{h}"
-                            )
-                        vals = list(px)
-                        rows.append({
-                            "doc_id": int(did), "page": rec["page"],
-                            "name": rec["name"], "width": w, "height": h,
-                            "channels": ch, "n_values": len(vals),
-                            "value_sum": int(sum(vals)),
-                            "weighted_sum": int(
-                                sum((k + 1) * v for k, v in enumerate(vals))
-                            ),
-                            "error": None,
-                        })
-                except Exception as e:  # corrupt doc/stream → error row
-                    rows.append({
-                        "doc_id": int(did), "page": -1, "name": "",
-                        "width": None, "height": None, "channels": None,
-                        "n_values": None, "value_sum": None,
-                        "weighted_sum": None,
-                        "error": f"{type(e).__name__}: {e}",
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(run, schema=JPEG_PIX_SCHEMA_DDL)
 
 
 def _ccitt_xobject_dims(i: int, j: int) -> dict:

@@ -15,18 +15,9 @@ Three paths:
   jobs) → inverted lists keyed by centroid → nprobe-list probe + exact
   re-rank. Measured recall@3 ≈ 0.97 vs brute force on the test embeddings
   (16 lists, nprobe 4).
-* **PQ ANN (ADC)** — product quantization (Jégou et al. 2011, public):
-  split the vector into ``m`` subspaces, quantize each against a frozen
-  data-drawn sub-codebook, store 1 code/subspace; a query precomputes an
-  (m × ksub) distance LUT and every comparison is ``m`` table lookups
-  over the code columns instead of a ``dim``-float scan — the memory/
-  bandwidth form of ANN (compose with IVF lists for candidate pruning;
-  the scan here is the honest pure-ADC cost model).
 """
 
 from __future__ import annotations
-
-from typing import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
@@ -39,8 +30,6 @@ __all__ = [
     "cosine_topk",
     "lsh_ann_topk",
     "ivf_ann_topk",
-    "ivfpq_ann_topk",
-    "pq_ann_topk",
     "semantic_dedup",
 ]
 
@@ -118,14 +107,6 @@ def _hyperplane(dim: int, plane: int, seed: int = 7) -> list:
     return vals
 
 
-def _sq_l2_cols(vec: Column, cvec: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(_as_double(vec), cvec, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _np_rows(col) -> "object":
     """pandas column of array values → (n, dim) float64 matrix. float32 →
     float64 conversion is the same exact widening as Spark's cast."""
@@ -196,44 +177,6 @@ def _np_cosine_score(pairs: DataFrame, qv: str, nv: str) -> DataFrame:
             yield out
 
     return pairs.mapInPandas(run, schema=ddl)
-
-
-def _assign(df: DataFrame, cdf: DataFrame, n: int) -> DataFrame:
-    """Rank centroids per row: broadcast-crossJoin the (tiny) centroid table
-    and keep the ``n`` nearest by squared L2. Centroids travel as DATA, not
-    as literal expression trees — the plan stays constant-size regardless of
-    k·dim, and the join is a broadcast nested loop over k rows.
-
-    The ``n == 1`` case (every clustering/assignment pass; semantic_dedup
-    runs it at corpus-scaled k) is an argmin, NOT a ranking — expressed as
-    a map-side-combinable ``MIN_BY(payload-struct, (d, cid))`` so the
-    shuffle carries one partial row per id per partition instead of the
-    full k-way expansion (vector payload included) a window sort would
-    ship; decisions are identical to the window form (the ORDERING struct
-    is only (d, cid) — ties break on cid, which is unique per centroid —
-    so payload columns never need to be orderable)."""
-    others = [c for c in df.columns if c != "id"]
-    scored = (
-        df.crossJoin(F.broadcast(cdf))
-        .withColumn("d", _sq_l2_cols(F.col("vec"), F.col("cvec")))
-        .drop("cvec")  # dead after d: never shuffle the centroid payload
-    )
-    if n == 1:
-        m = scored.groupBy("id").agg(
-            F.min_by(
-                F.struct("cid", *others), F.struct("d", "cid")
-            ).alias("_m")
-        )
-        return m.select(
-            "id", *[F.col(f"_m.{c}").alias(c) for c in others],
-            F.col("_m.cid").alias("cid"),
-        )
-    w = Window.partitionBy("id").orderBy("d", "cid")
-    return (
-        scored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= n)
-        .drop("d", "crank")
-    )
 
 
 def _assign_np(df: DataFrame, C, cid_vals, n: int, cid_ddl: str) -> DataFrame:
@@ -345,281 +288,6 @@ def ivf_ann_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id")
     )
-
-
-def _sq_l2_slice(a: Column, b: Column, start: Column, length: int) -> Column:
-    """Squared L2 over one subspace: identical sequential float64 fold as
-    ``_sq_l2_cols``, restricted to ``length`` dims starting at 1-based
-    ``start`` — mirrored by DuckDB ``list_slice`` + ``list_reduce``."""
-    return F.aggregate(
-        F.zip_with(
-            F.slice(_as_double(a), start, length),
-            F.slice(_as_double(b), start, length),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _pq_checked_vec(c: Column, dim: int) -> Column:
-    """Length-guarded vector: evaluates to the vector when its size is
-    ``dim`` and raises at execution otherwise. The check rides INSIDE the
-    value column so column pruning cannot optimize it away — without it a
-    caller whose embeddings are longer (or shorter) than ``dim`` gets
-    silently mis-sliced codebooks and a recall collapse with no error."""
-    return F.when(F.size(c) == dim, c).otherwise(
-        F.raise_error(f"PQ: embedding length != dim={dim}")
-    )
-
-
-def _pq_codebook(emb: DataFrame, id_col: str, vec_col: str,
-                 ksub: int, dim: int) -> DataFrame:
-    """Frozen data-drawn sub-codebook source: the first ``ksub`` vectors
-    in md5(id) order (the deterministic-quantizer idiom shared with IVF
-    and semdedup; production would Lloyd-refine each subspace, same
-    structure) → (cid, cvec)."""
-    h = F.md5(F.col(id_col).cast("string"))
-    return (
-        emb.select(F.col(id_col).alias("src"),
-                   _pq_checked_vec(F.col(vec_col), dim).alias("cvec"),
-                   h.alias("h"))
-        .orderBy("h", "src")
-        .limit(ksub)
-        .withColumn("cid", F.row_number().over(Window.orderBy("h", "src")) - 1)
-        .select("cid", "cvec")
-    )
-
-
-def _pq_sub_dists(df: DataFrame, cents: DataFrame, keep: list,
-                  m: int, sub_d: int) -> DataFrame:
-    """Per (row, subspace, centroid) squared L2 over the subspace slice:
-    broadcast the tiny codebook, explode the ``m`` subspaces, fold."""
-    start = (F.col("s") * sub_d + 1).cast("int")
-    return (
-        df.crossJoin(F.broadcast(cents))
-        .select(
-            *keep, "cid",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
-            "vec", "cvec",
-        )
-        .withColumn("d", _sq_l2_slice(F.col("vec"), F.col("cvec"),
-                                      start, sub_d))
-        .drop("vec", "cvec")
-    )
-
-
-def _pq_codes(df: DataFrame, cents: DataFrame, keep: list,
-              m: int, sub_d: int) -> DataFrame:
-    """PQ encoding: argmin centroid per (vector, subspace), ties to the
-    lowest centroid id → (*keep, s, cid)."""
-    wcode = Window.partitionBy(keep[0], "s").orderBy("d", "cid")
-    return (
-        _pq_sub_dists(df, cents, keep, m, sub_d)
-        .withColumn("rn", F.row_number().over(wcode))
-        .filter(F.col("rn") == 1)
-        .select(*keep, "s", "cid")
-    )
-
-
-def _adc_shortlist(adc: DataFrame, rerank: int) -> DataFrame:
-    ws = Window.partitionBy("query_id").orderBy(F.asc("adist"),
-                                                F.asc("neighbor_id"))
-    return (
-        adc.withColumn("srank", F.row_number().over(ws))
-        .filter(F.col("srank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-
-
-def _pq_exact_rerank(shortlist: DataFrame, q: DataFrame, base: DataFrame,
-                     k: int) -> DataFrame:
-    """Exact squared-L2 re-rank of the ADC shortlist: only ``rerank``
-    true vectors per query are ever read."""
-    exact = (
-        shortlist
-        .join(q.withColumnRenamed("vec", "qvec"), "query_id")
-        .join(base.select(F.col("id").alias("neighbor_id"),
-                          F.col("vec").alias("nvec")), "neighbor_id")
-        .withColumn("dist", _sq_l2_cols(F.col("qvec"),
-                                        _as_double(F.col("nvec"))))
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.asc("dist"),
-                                                F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dist")
-    )
-
-
-def pq_ann_topk(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_pred: Column,
-    k: int = 3,
-    m: int = 16,
-    ksub: int = 64,
-    rerank: int = 32,
-    dim: int = 64,
-) -> DataFrame:
-    """Product-quantization ANN: ADC shortlist + exact re-rank (the
-    "ADC with re-ranking" pipeline of Jégou et al. 2011):
-    → (query_id, rank, neighbor_id, dist), ``dist`` the EXACT squared L2.
-
-    Index: the vector splits into ``m`` subspaces of ``dim//m`` dims;
-    each subspace has a FROZEN data-drawn sub-codebook (``_pq_codebook``)
-    and every vector stores one code per subspace (argmin squared-L2,
-    ties to the lowest centroid id): ``m`` small ints instead of ``dim``
-    floats — 16× compression at the defaults, and the full-vector scan
-    happens only over codes.
-
-    Query: precompute the (m × ksub) LUT of subspace distances; the ADC
-    pass is ``m`` LUT lookups + adds per code row and keeps only the
-    ``rerank`` best candidates per query, which are then re-ranked by
-    exact squared L2 on the true vectors (``rerank`` rows per query, not
-    the corpus). Measured on the test embeddings (UNCLUSTERED near-random
-    vectors — the hardest case for any quantizer): recall@3 ≈ 0.93 at
-    m=16/ksub=64/rerank=32, vs 0.03 for raw-ADC ordering alone — the
-    re-rank stage is not optional at this dimensionality, which is why it
-    is part of the operator and not left to the caller. Compose with IVF
-    inverted lists to prune the code scan at 10^12 scale
-    (``ivfpq_ann_topk`` is exactly that composition, sharing these
-    helpers).
-
-    Parity design: subspace/exact distances are the same sequential
-    float64 fold as IVF (bitwise-deterministic in both engines); the LUT
-    entries are rounded-and-DECIMAL-cast per row so the per-pair ADC SUM
-    is exact decimal arithmetic — independent of partitioning and
-    addition order (a float sum would not be). ``dim`` must equal the
-    embedding length (execution-time guarded) and divide by ``m``.
-    """
-    if dim % m:
-        raise ValueError("pq_ann_topk: dim must be divisible by m")
-    sub_d = dim // m
-    cents = _pq_codebook(emb, id_col, vec_col, ksub, dim)
-    base = emb.select(F.col(id_col).alias("id"),
-                      _pq_checked_vec(F.col(vec_col), dim).alias("vec"))
-    codes = _pq_codes(base, cents, ["id"], m, sub_d)
-
-    q = emb.filter(query_pred).select(
-        F.col(id_col).alias("query_id"),
-        _pq_checked_vec(F.col(vec_col), dim).alias("vec"),
-    )
-    lut = _pq_sub_dists(q, cents, ["query_id"], m, sub_d).select(
-        "query_id", "s", "cid",
-        F.round("d", 9).cast("decimal(28,9)").alias("dd"),
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["s", "cid"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("dd").alias("adist"))  # exact decimal sum over m terms
-    )
-    return _pq_exact_rerank(_adc_shortlist(adc, rerank), q, base, k)
-
-
-def ivfpq_ann_topk(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_pred: Column,
-    k: int = 3,
-    n_coarse: int = 16,
-    nprobe: int = 6,
-    m: int = 16,
-    ksub: int = 64,
-    rerank: int = 24,
-    seed: int = 7,
-    dim: int = 64,
-) -> DataFrame:
-    """The 10^12-scale ANN composition: IVF inverted-list pruning + PQ
-    code scan + exact re-rank (the IVFADC pipeline of Jégou et al. 2011,
-    here without residual encoding — codes quantize the raw vectors, the
-    production refinement being PQ over per-list residuals with the SAME
-    plan shape): → (query_id, rank, neighbor_id, dist).
-
-    Plan shape, which is the point: the coarse assignment keys BOTH
-    sides by centroid id, so the ADC scan joins on (cid, s, code) —
-    queries only meet the ~nprobe/n_coarse fraction of code rows in
-    their probed lists (IVF prunes candidates), each surviving
-    comparison costs m LUT adds over 16×-compressed codes (PQ cuts
-    bytes), and only ``rerank`` true vectors per query are ever touched
-    (exact re-rank restores accuracy). Every stage is an equi-join or
-    partial aggregation — no stage holds corpus-proportional state.
-    Measured recall@3 ≈ 0.83 on the unclustered test embeddings (the
-    nprobe prune sets the ceiling).
-
-    Frozen deterministic quantizers throughout (coarse = the seeded
-    md5 hyperplanes shared with ``ivf_ann_topk``; sub-codebooks, codes,
-    shortlist and re-rank = the exact helpers ``pq_ann_topk`` uses) so
-    the DuckDB oracle restates the whole pipeline. Same float-parity
-    design as the family: sequential float64 folds + rounded-DECIMAL
-    LUT sums."""
-    if dim % m:
-        raise ValueError("ivfpq_ann_topk: dim must be divisible by m")
-    spark = emb.sparkSession
-    sub_d = dim // m
-    coarse = spark.createDataFrame(
-        [(c, [float(x) for x in _hyperplane(dim, c, seed)])
-         for c in range(n_coarse)],
-        "ccid INT, ccvec ARRAY<DOUBLE>",
-    )
-    base = emb.select(F.col(id_col).alias("id"),
-                      _pq_checked_vec(F.col(vec_col), dim).alias("vec"))
-
-    def coarse_assign(df: DataFrame, idn: str, n: int) -> DataFrame:
-        # same argmin-vs-ranking split as _assign: n == 1 is a map-side-
-        # combinable MIN_BY ordered on (cd, ccid) only, n > 1 a window —
-        # and the centroid payload never reaches either shuffle
-        others = [c for c in df.columns if c != idn]
-        scored = (
-            df.crossJoin(F.broadcast(coarse))
-            .withColumn("cd", _sq_l2_cols(F.col("vec"), F.col("ccvec")))
-            .drop("ccvec")
-        )
-        if n == 1:
-            m = scored.groupBy(idn).agg(
-                F.min_by(
-                    F.struct("ccid", *others), F.struct("cd", "ccid")
-                ).alias("_m")
-            )
-            return m.select(
-                idn, *[F.col(f"_m.{c}").alias(c) for c in others],
-                F.col("_m.ccid").alias("ccid"),
-            )
-        w = Window.partitionBy(idn).orderBy("cd", "ccid")
-        return (
-            scored.withColumn("crank", F.row_number().over(w))
-            .filter(F.col("crank") <= n)
-            .drop("cd", "crank")
-        )
-
-    lists = coarse_assign(base, "id", 1)  # (id, vec, ccid)
-    cents = _pq_codebook(emb, id_col, vec_col, ksub, dim)
-    codes = _pq_codes(lists, cents, ["id", "ccid"], m, sub_d)
-
-    q = emb.filter(query_pred).select(
-        F.col(id_col).alias("query_id"),
-        _pq_checked_vec(F.col(vec_col), dim).alias("vec"),
-    )
-    qprobe = coarse_assign(q, "query_id", nprobe)  # (query_id, vec, ccid)
-    lut = _pq_sub_dists(q, cents, ["query_id"], m, sub_d).select(
-        "query_id", "s", "cid",
-        F.round("d", 9).cast("decimal(28,9)").alias("dd"),
-    )
-    adc = (
-        qprobe.select("query_id", "ccid")
-        .join(codes, "ccid")  # IVF pruning: only probed lists' codes
-        .join(F.broadcast(lut), ["query_id", "s", "cid"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("dd").alias("adist"))
-    )
-    return _pq_exact_rerank(_adc_shortlist(adc, rerank), q, base, k)
 
 
 def semantic_dedup(

@@ -79,7 +79,7 @@ def test_codestream_roundtrip_matrix():
 
 def test_levels_rotation_pixel_invariant():
     # same pixels through 0/1/2 decompositions decode identically — the
-    # hazard-rotation property the pdf_jpx_decode oracle relies on
+    # hazard-rotation property the real_media_decode jp2k oracle relies on
     px = bytes((7 * x + 11 * y) % 256 for y in range(24) for x in range(19))
     outs = {decode_jpx(encode_jpx(19, 24, 1, px, levels=lv))[3]
             for lv in (0, 1, 2)}
@@ -129,13 +129,27 @@ def test_hostile_dims_rejected_before_allocation():
         decode_jpx(data)
 
 
-def test_pdf_jpx_chain_value_identity():
-    # writer → PDF walk → decode: the exact-formula contract behind the
-    # pdf_jpx_decode extras oracle, checked here without Spark
-    from b_pdf_parser_spark.operators.multimodal import (
-        _jpx_pixels,
-        _jpx_xobject_dims,
+def _jpx_xobject_dims(i: int, j: int) -> dict:
+    # embedded image j of doc i: sizes, channels and wavelet levels rotate
+    return {
+        "w": 6 + (i * 5 + j * 3) % 19,
+        "h": 5 + (i * 2 + j) % 14,
+        "ch": (1, 3)[(i + j) % 2],
+        "levels": (i + j) % 3,
+        "seed": i * 13 + j * 7,
+    }
+
+
+def _jpx_pixels(s: int, w: int, h: int, ch: int) -> bytes:
+    return bytes(
+        (s + 7 * x + 11 * y + 97 * c) % 256
+        for y in range(h) for x in range(w) for c in range(ch)
     )
+
+
+def test_pdf_jpx_chain_value_identity():
+    # writer → PDF walk → decode: embedded JPX XObjects come back out of
+    # image_inventory and decode to the generating formula (lossless 5/3)
     from b_pdf_parser_spark.pdfmodel import image_inventory
     from b_pdf_parser_spark.pdfwriter import build_pdf
 

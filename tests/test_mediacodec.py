@@ -746,62 +746,3 @@ def test_wav_float32_exact_family_and_clamp():
 def test_encode_wav_float32_conflicts_rejected():
     with pytest.raises(ValueError, match="at most one"):
         encode_wav(8000, 1, [0.0], float32=True, ulaw=True)
-
-
-# ---------------------------------------------------------------------------
-# animated GIF: inter-frame composition
-# ---------------------------------------------------------------------------
-
-
-def test_gif_frames_disposal_semantics():
-    from b_pdf_parser_spark.mediacodec import decode_gif_frames, encode_gif_frames
-
-    pal = [(10, 20, 30), (200, 100, 50), (0, 0, 0), (255, 255, 255)]
-    frames = [
-        dict(left=0, top=0, w=4, h=1, indices=bytes([1]) * 4,
-             disposal=1, delay_cs=10),
-        dict(left=0, top=1, w=4, h=1, indices=bytes([3]) * 4,
-             disposal=2, delay_cs=20),
-        dict(left=2, top=2, w=2, h=1, indices=bytes([0, 1]),
-             disposal=3, delay_cs=30, transparent=0),
-    ]
-    sw, sh, out = decode_gif_frames(encode_gif_frames(4, 3, pal, 0, frames))
-    assert (sw, sh) == (4, 3) and [f["delay_cs"] for f in out] == [10, 20, 30]
-
-    def row_r(f, y):
-        return [f["rgb"][3 * (y * 4 + x)] for x in range(4)]
-
-    assert row_r(out[0], 0) == [200] * 4          # frame 0 paints row 0
-    assert row_r(out[1], 1) == [255] * 4          # disposal 1 left row 0...
-    assert row_r(out[1], 0) == [200] * 4          # ...visible under frame 1
-    assert row_r(out[2], 1) == [10] * 4           # disposal 2 restored bg
-    # transparency: index 0 leaves the canvas (bg), index 1 paints
-    assert row_r(out[2], 2) == [10, 10, 10, 200]
-
-
-def test_gif_frames_local_palette_and_single_frame_matches_static():
-    from b_pdf_parser_spark.mediacodec import (
-        decode_gif,
-        decode_gif_frames,
-        encode_gif,
-        encode_gif_frames,
-    )
-
-    gpal = [(1, 2, 3), (9, 8, 7)]
-    lpal = [(100, 110, 120), (130, 140, 150)]
-    g = encode_gif_frames(2, 2, gpal, 0, [
-        dict(left=0, top=0, w=2, h=1, indices=bytes([1, 0]),
-             disposal=0, palette=lpal),
-    ])
-    sw, sh, out = decode_gif_frames(g)
-    # local palette scopes to its frame only; untouched rows keep global bg
-    assert out[0]["rgb"][0:6] == bytes([130, 140, 150, 100, 110, 120])
-    assert out[0]["rgb"][6:9] == bytes([1, 2, 3])
-
-    # a 1-frame full-canvas animation equals the static decoder's pixels
-    idx = bytes([0, 1, 1, 0])
-    static = decode_gif(encode_gif(2, 2, gpal, idx))
-    _, _, anim = decode_gif_frames(encode_gif_frames(2, 2, gpal, 0, [
-        dict(left=0, top=0, w=2, h=2, indices=idx, disposal=0),
-    ]))
-    assert static[3] == anim[0]["rgb"]

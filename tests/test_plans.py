@@ -62,9 +62,9 @@ def test_filter_pushdown_on_pages(spark, pages_parquet):
 
 
 def test_broadcast_joins_in_dimension_queries(spark):
-    for name in ("top_customers", "regional_revenue"):
-        plan = _plan(ALL_Q[name](spark, "/root/testdata/sf0.001"))
-        assert "BroadcastHashJoin" in plan, name
+    # crawl_frontier joins its candidate urls to a 20-row host rules dim
+    plan = _plan(ALL_Q["crawl_frontier"](spark, "/root/testdata/sf0.001"))
+    assert "BroadcastHashJoin" in plan
 
 
 def test_partial_aggregation_present(spark):

@@ -92,9 +92,11 @@ def test_frontier_stream_epoch_retry_is_idempotent(spark, tmp_path):
 
 
 def test_frontier_stream_matches_batch_antijoin(spark, tmp_path):
-    # exactness across many overlapping batches: the union of all epoch
-    # outputs must equal DISTINCT(all candidates) — the batch anti-join
-    # contract, held online
+    # exactness across many overlapping batches: each epoch emits exactly
+    # its keys not seen in an earlier epoch (so every key lands in the
+    # first epoch where it appears), and the union of all epoch outputs
+    # equals DISTINCT(all candidates) — the batch anti-join contract, held
+    # online
     hist = str(tmp_path / "hist")
     state = FrontierState(spark, hist, key_col="url", m_bits=M, k=K)
     seen = set()
@@ -111,6 +113,7 @@ def test_frontier_stream_matches_batch_antijoin(spark, tmp_path):
         ]
         assert len(epoch_urls) == len(set(epoch_urls))
         assert not (set(epoch_urls) & seen), "re-emitted an already-seen key"
+        assert set(epoch_urls) == set(urls) - seen, "key missed its first epoch"
         seen |= set(epoch_urls)
     assert seen == set(all_urls)
 
