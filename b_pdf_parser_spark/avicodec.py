@@ -9,7 +9,9 @@ real, widely-used codec: MJPEG is plain intra-frame JPEG per frame, so
 the whole entropy/DCT surface is the already-value-oracled
 :mod:`b_pdf_parser_spark.jpegcodec`, and what this module adds — and
 what the corpus oracles check — is the container walk (chunk sizes,
-word alignment, header/stream agreement, the movi scan).
+word alignment, header/stream agreement, the movi scan) and the
+frame-sampling semantics a training-data pipeline needs (decode every
+N-th frame, not the whole stream).
 
 Deliberately out of scope (stated, not silently skipped): inter-frame
 codecs (H.26x/VPx/AV1 need entropy+motion machinery far beyond this
@@ -204,3 +206,17 @@ def decode_avi(data: bytes) -> Tuple[int, int, int, int, List[Tuple[int, int, in
     rendering a silently-wrong video."""
     w, h, fps, nf, sampled = _decode_avi_sampled(data, 1)
     return w, h, fps, nf, [fr for _, fr in sampled]
+
+
+@_fail_loud
+def sample_avi_frames(
+    data: bytes, every: int = 2
+) -> Tuple[int, int, int, List[Tuple[int, Tuple[int, int, int, bytes]]]]:
+    """Frame sampling for training-data pipelines: decode only frames
+    ``0, every, 2*every, ...`` → (width, height, fps,
+    [(frame_index, (w, h, ch, pixels)), ...]). Runs the SAME validated
+    container walk as :func:`decode_avi` (header/stream/dimension/count
+    agreement, cumulative pixel budget); the saving is skipping the JPEG
+    decode of unsampled frames (the dominant cost at video scale)."""
+    w, h, fps, _nf, sampled = _decode_avi_sampled(data, every)
+    return w, h, fps, sampled

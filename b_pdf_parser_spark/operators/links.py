@@ -21,8 +21,12 @@ from pyspark.sql import DataFrame
 
 __all__ = [
     "extract_outlinks",
+    "host_degrees",
     "host_pagerank",
     "parse_robots",
+    "parse_sitemaps",
+    "parse_feeds",
+    "sitemap_index_urls",
     "robots_filter",
     "synth_linkdoc_df",
     "synth_pdflink_doc_df",
@@ -91,6 +95,22 @@ def extract_outlinks(docs: DataFrame, id_col: str = "doc_id", html_col: str = "h
             yield pd.DataFrame(rows, columns=["doc_id", "href", "anchor"])
 
     return docs.mapInPandas(run, schema=LINKS_SCHEMA_DDL)
+
+
+def host_degrees(edges: DataFrame) -> DataFrame:
+    """Host-level in-degree: total inlinks + distinct linking documents.
+    One shuffle on the host key; both aggregates partial-combine map-side."""
+    return (
+        edges.select(
+            "doc_id", F.regexp_extract("href", _HOST_PATTERN, 1).alias("host")
+        )
+        .filter(F.col("host") != "")
+        .groupBy("host")
+        .agg(
+            F.count("*").alias("n_inlinks"),
+            F.count_distinct("doc_id").alias("n_docs"),
+        )
+    )
 
 
 def host_pagerank(
@@ -240,6 +260,161 @@ def robots_filter(urls: DataFrame, rules: DataFrame) -> DataFrame:
     return urls.join(best, "url", "left").select(
         "url", "host", "path", F.coalesce("allow", F.lit(True)).alias("allowed")
     )
+
+
+def _xml_unescape(c: F.Column) -> F.Column:
+    """The five XML predefined entities (sitemap locs escape & as &amp;).
+    amp last, so '&amp;lt;' decodes to the literal '&lt;' like real parsers."""
+    for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
+                    ("&apos;", "'"), ("&amp;", "&")):
+        c = F.replace(c, F.lit(ent), F.lit(ch))
+    return c
+
+
+def parse_sitemaps(
+    df: DataFrame, host_col: str = "host", xml_col: str = "xml"
+) -> DataFrame:
+    """XML sitemap (sitemaps.org protocol) → one row per ``<url>`` entry:
+    (host, loc, lastmod, changefreq, priority) — entirely relational, the
+    discovery-side complement of :func:`parse_robots` (robots says what may
+    be crawled; sitemaps say what exists and how fresh it is).
+
+    Tolerances matching real feeds: arbitrary whitespace/newlines inside
+    entries, missing optional fields (lastmod/changefreq → null, priority →
+    the protocol's 0.5 default), XML-escaped ampersands in locs, attributes
+    on the ``<urlset>``/``<url>`` tags. Entries with no ``<loc>`` are
+    dropped. ``<![CDATA[...]]>`` locs are not supported (rare in practice
+    and regex-hostile; a feed using them parses to no rows, never garbage).
+
+    Scale shape: regexp_extract_all + explode is map-only per sitemap doc;
+    sitemap files cap at 50k urls / 50 MB by protocol, so one document is
+    always one task's worth of work.
+    """
+    blocks = df.select(
+        F.col(host_col).alias("host"),
+        F.explode(
+            F.expr(f"regexp_extract_all({xml_col}, '(?s)<url[ >](.*?)</url>', 1)")
+        ).alias("entry"),
+    )
+    loc = F.regexp_extract("entry", r"(?s)<loc>\s*(.*?)\s*</loc>", 1)
+    lastmod = F.regexp_extract("entry", r"(?s)<lastmod>\s*(.*?)\s*</lastmod>", 1)
+    freq = F.regexp_extract("entry", r"(?s)<changefreq>\s*(.*?)\s*</changefreq>", 1)
+    prio = F.regexp_extract("entry", r"(?s)<priority>\s*(.*?)\s*</priority>", 1)
+    return (
+        blocks.select(
+            "host",
+            _xml_unescape(loc).alias("loc"),
+            F.when(lastmod != "", lastmod).alias("lastmod"),
+            F.when(freq != "", F.lower(freq)).alias("changefreq"),
+            F.coalesce(prio.try_cast("double"), F.lit(0.5)).alias("priority"),
+        )
+        .filter(F.col("loc") != "")
+    )
+
+
+def parse_feeds(
+    df: DataFrame, id_col: str = "feed_id", xml_col: str = "xml"
+) -> DataFrame:
+    """RSS 2.0 / Atom 1.0 syndication feeds → one row per item/entry:
+    ``(feed_id, kind, item_ix, title, link, pub_date)`` — entirely
+    relational like :func:`parse_sitemaps` (regexp_extract_all + explode;
+    zero Python in the hot path, the same RE2 patterns restate in DuckDB).
+    Feeds are the freshness side of crawl discovery: sitemaps say what
+    exists, feeds say what just changed.
+
+    Tolerances matching real feeds: ``<![CDATA[...]]>`` titles pass their
+    content RAW (real feeds put markup there), plain titles get the five
+    XML entities decoded, attributes on ``<entry>``/``<title>``/``<link>``
+    tags are ignored, a missing date yields null, and a TRUNCATED trailing
+    item (no close tag) is dropped, never garbage. RSS dates (RFC 822
+    ``Tue, 02 Jan 2024 …``) and Atom dates (ISO 8601) both normalize to
+    ``YYYY-MM-DD``; RSS ``<link>`` is element text, Atom's is the ``href``
+    attribute — the two syntaxes unify into one schema.
+
+    Scale shape: map-only per feed document (posexplode of the per-doc
+    match list); feeds are small by protocol convention, so one document
+    is far below one task's worth of work."""
+    src = df.select(F.col(id_col).alias("feed_id"), F.col(xml_col).alias("xml"))
+    kind = (
+        F.when(F.col("xml").rlike("<rss[ >]"), F.lit("rss"))
+        .when(F.col("xml").rlike("<feed[ >]"), F.lit("atom"))
+    )
+    base = src.withColumn("kind", kind).filter(F.col("kind").isNotNull())
+    items = base.select(
+        "feed_id",
+        "kind",
+        F.posexplode(
+            F.when(
+                F.col("kind") == "rss",
+                F.expr(
+                    "regexp_extract_all(xml, '(?s)<item[ >](.*?)</item>', 1)"
+                ),
+            ).otherwise(
+                F.expr(
+                    "regexp_extract_all(xml, '(?s)<entry[ >](.*?)</entry>', 1)"
+                )
+            )
+        ).alias("item_ix", "entry"),
+    )
+    rawt = F.regexp_extract("entry", r"(?s)<title[^>]*>\s*(.*?)\s*</title>", 1)
+    cdata = F.regexp_extract(rawt, r"(?s)^<!\[CDATA\[(.*)\]\]>$", 1)
+    title = F.when(cdata != "", cdata).otherwise(_xml_unescape(rawt))
+    link = F.when(
+        F.col("kind") == "rss",
+        F.regexp_extract("entry", r"(?s)<link>\s*(.*?)\s*</link>", 1),
+    ).otherwise(F.regexp_extract("entry", r'<link[^>]*href\s*=\s*"([^"]*)"', 1))
+    rfc = F.regexp_extract(
+        "entry", r"(?s)<pubDate>\s*([^<]*?)\s*</pubDate>", 1
+    )
+    # RFC 822 allows a 1-or-2-digit day and makes the leading weekday
+    # OPTIONAL — real feeds use every combination
+    _d = r"^(?:[A-Za-z]{3},\s*)?(\d{1,2}) [A-Za-z]{3} \d{4}"
+    _m = r"^(?:[A-Za-z]{3},\s*)?\d{1,2} ([A-Za-z]{3}) \d{4}"
+    _y = r"^(?:[A-Za-z]{3},\s*)?\d{1,2} [A-Za-z]{3} (\d{4})"
+    mon = F.regexp_extract(rfc, _m, 1)
+    mm = F.lit(None).cast("string")
+    for k, name in enumerate(
+        ("Jan", "Feb", "Mar", "Apr", "May", "Jun",
+         "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"), start=1
+    ):
+        mm = F.when(mon == name, F.lit(f"{k:02d}")).otherwise(mm)
+    rss_date = F.concat(
+        F.regexp_extract(rfc, _y, 1),
+        F.lit("-"), mm, F.lit("-"),
+        F.lpad(F.regexp_extract(rfc, _d, 1), 2, "0"),
+    )
+    atom_upd = F.regexp_extract(
+        "entry", r"(?s)<updated>\s*(.*?)\s*</updated>", 1
+    )
+    pub_date = F.when(
+        F.col("kind") == "rss", F.when(rfc != "", rss_date)
+    ).otherwise(F.when(atom_upd != "", F.substring(atom_upd, 1, 10)))
+    return items.select(
+        "feed_id", "kind", "item_ix",
+        title.alias("title"),
+        _xml_unescape(link).alias("link"),
+        pub_date.alias("pub_date"),
+    )
+
+
+def sitemap_index_urls(
+    df: DataFrame, host_col: str = "host", xml_col: str = "xml"
+) -> DataFrame:
+    """Sitemap INDEX files → (host, sitemap_loc): the recursion edge a
+    crawler follows to fetch child sitemaps (protocol: index files wrap
+    ``<sitemap><loc>`` entries instead of ``<url>``)."""
+    locs = df.select(
+        F.col(host_col).alias("host"),
+        F.explode(
+            F.expr(
+                f"regexp_extract_all({xml_col},"
+                " '(?s)<sitemap[ >].*?<loc>\\\\s*(.*?)\\\\s*</loc>.*?</sitemap>', 1)"
+            )
+        ).alias("raw"),
+    )
+    return locs.select(
+        "host", _xml_unescape(F.col("raw")).alias("sitemap_loc")
+    ).filter(F.col("sitemap_loc") != "")
 
 
 # ---------------------------------------------------------------------------

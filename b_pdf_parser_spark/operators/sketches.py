@@ -1,4 +1,4 @@
-"""HyperLogLog distinct-count sketch, from scratch and oracle-exact.
+"""HyperLogLog distinct-count sketch (plus Count-Min), from scratch and exact.
 
 Flajolet et al. 2007 (public): hash every key, use the top ``b`` bits as a
 register index and the position of the first 1-bit in the remainder as the
@@ -7,10 +7,9 @@ count. The POINT of the sketch at 100 TB is mergeability: per-partition
 register vectors combine by element-wise MAX, so a 10^12-row distinct count
 is one map-side-combined ``groupBy(register).max()`` over ``m`` rows — no
 shuffle of the keys themselves, and sketches from different days/sources
-merge the same way ([[spark-graft-project]]: Spark's own
-``approx_count_distinct`` is this HLL++, but its sketch is opaque — this
-one is a DataFrame, so the driver gate can check EXACT register values and
-the estimate against a DuckDB replay).
+merge the same way (Spark's own ``approx_count_distinct`` is this HLL++,
+but its sketch is opaque — this one is a DataFrame, so merges and register
+values can be checked exactly).
 
 Determinism: md5-derived 60-bit hashes, integer register/rho extraction (a
 generated integer CASE chain — no floating log2 whose last-ulp could flip
@@ -38,9 +37,9 @@ HLL_REST_BITS = 52  # 60-bit hash minus up to 8 register bits
 
 def rho_case_sql(rest_expr: str, rest_bits: int = HLL_REST_BITS) -> str:
     """Leading-zero count (+1) of a ``rest_bits``-wide integer field as a
-    pure integer CASE chain — shared VERBATIM by the Spark expression and
-    the DuckDB oracle, so there is no engine-specific bit intrinsic or
-    floating log whose rounding could diverge."""
+    pure integer CASE chain in plain SQL text, so there is no
+    engine-specific bit intrinsic or floating log whose rounding could
+    diverge."""
     arms = " ".join(
         f"WHEN {rest_expr} >= {1 << (rest_bits - k)} THEN {k}"
         for k in range(1, rest_bits + 1)
@@ -108,7 +107,7 @@ def hll_estimate(regs: DataFrame, b: int = 8) -> DataFrame:
 # sketch is (row, col, cnt) counter cells, merging two sketches is
 # groupBy(row, col).sum(cnt), and a point estimate is the MIN over the d
 # hash rows. Everything is integer arithmetic on md5-derived columns, so
-# the DuckDB oracle checks EXACT cell values and estimates — and the
+# cell values and estimates are exact under any partitioning — and the
 # defining guarantee (estimate >= true count, overestimate bounded by
 # collisions) is assertable per key.
 # ---------------------------------------------------------------------------

@@ -63,6 +63,32 @@ def test_streaming_lift(spark, tmp_path):
     assert got.filter(F.col("kind") == "pdf").count() > 0
 
 
+def test_compression_ratio_matches_direct_zlib(spark):
+    import zlib
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa",      # highly compressible
+        "", None,                                         # degenerate → 0.0
+        "naïve café résumé — unicode bytes ≠ chars",      # multi-byte utf-8
+        "spam spam spam spam spam spam spam spam spam",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "doc_id long, text string")
+    from b_pdf_parser_spark.operators.textstats import with_compression_ratio
+
+    got = {r["doc_id"]: r["zlib_ratio"]
+           for r in with_compression_ratio(df).collect()}
+    for i, t in enumerate(texts):
+        if not t:
+            assert got[i] == 0.0
+        else:
+            raw = t.encode("utf-8")
+            assert got[i] == len(zlib.compress(raw, 6)) / len(raw)
+    # the signal orders as intended: repetitive text ≪ natural text
+    assert got[1] < got[5] < got[0]
+
+
 def test_write_jsonl_roundtrip(spark, tmp_path):
     from b_pdf_parser_spark.sources.sinks import write_jsonl
 

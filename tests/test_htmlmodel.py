@@ -165,3 +165,53 @@ def test_tables_survive_unicode_case_length_changes():
             "</table></body></html>").encode("utf-8")
     from b_pdf_parser_spark.htmlmodel import extract_html_tables
     assert extract_html_tables(html) == [[["01/01/24", "İstanbul"]]]
+
+
+# ---------------------------------------------------------------------------
+# structured-data harvest
+# ---------------------------------------------------------------------------
+
+
+def test_structured_data_attribute_order_and_quoting():
+    from b_pdf_parser_spark.htmlmodel import extract_structured_data
+
+    html = (b"<html><head><title> Spaced &amp; Titled </title>"
+            b"<meta content='A' property='og:title'>"
+            b'<meta property="og:type" content="article">'
+            b"<meta name=og:locale content=en_US>"
+            b"<link href=https://x.example/p/1 rel=canonical>"
+            b"</head><body></body></html>")
+    sd = extract_structured_data(html)
+    assert sd["title"] == "Spaced & Titled"        # trimmed + entity-decoded
+    assert sd["og"] == {"og:title": "A", "og:type": "article",
+                        "og:locale": "en_US"}      # order/quoting-agnostic
+    assert sd["canonical"] == "https://x.example/p/1"
+    assert sd["jsonld"] == [] and sd["jsonld_ok"] is True
+
+
+def test_structured_data_jsonld_blocks_and_failure_flag():
+    from b_pdf_parser_spark.htmlmodel import extract_structured_data
+
+    html = (b"<html><head>"
+            b'<script type="application/ld+json">{"@type": "Article"}</script>'
+            b'<script type="application/ld+json">{broken</script>'
+            b'<script type="application/ld+json">{"@type": "Report"}</script>'
+            b"<script>var x = 1;</script>"  # plain script: not JSON-LD
+            b"</head><body></body></html>")
+    sd = extract_structured_data(html)
+    assert [d["@type"] for d in sd["jsonld"]] == ["Article", "Report"]
+    assert sd["jsonld_ok"] is False  # the broken block flags, never throws
+    assert sd["title"] is None and sd["canonical"] is None
+
+
+def test_structured_data_first_meta_wins_and_non_og_ignored():
+    from b_pdf_parser_spark.htmlmodel import extract_structured_data
+
+    html = (b"<html><head>"
+            b'<meta property="og:title" content="first">'
+            b'<meta property="og:title" content="second">'
+            b'<meta name="description" content="not og">'
+            b'<meta property="og:broken">'  # no content attr: skipped
+            b"</head><body></body></html>")
+    sd = extract_structured_data(html)
+    assert sd["og"] == {"og:title": "first"}

@@ -1,6 +1,7 @@
 """Unit tests for the as-of join, deterministic sampling, incremental dedup,
-per-host caps, quality decisions and token sharding (semantics beyond the
-DuckDB oracle parity, which tests/test_entry_oracle.py covers)."""
+per-host caps, quality decisions, token sharding, chunking, LM scoring,
+BM25 and card scrubbing (semantics beyond the DuckDB oracle parity, which
+tests/test_entry_oracle.py covers)."""
 
 import datetime as dt
 
@@ -8,8 +9,13 @@ import pytest
 import pyspark.sql.functions as F
 
 from b_pdf_parser_spark.operators.dedup import incremental_dedup
-from b_pdf_parser_spark.operators.sampling import hash_threshold, stratified_sample
+from b_pdf_parser_spark.operators.sampling import (
+    hash_sample,
+    hash_threshold,
+    stratified_sample,
+)
 from b_pdf_parser_spark.operators.temporal import asof_join
+from b_pdf_parser_spark.operators.textstats import bigram_logprob, unigram_logprob
 
 
 def _ts(s):
@@ -100,6 +106,23 @@ def ids_df(spark):
     )
 
 
+def test_hash_sample_rate_and_determinism(ids_df):
+    kept = hash_sample(ids_df, "doc_id", 0.25)
+    n = kept.count()
+    assert abs(n / 4000 - 0.25) < 0.05  # uniform hash → close to rate
+    # re-running with a different partitioning yields the identical set
+    again = hash_sample(ids_df.repartition(13), "doc_id", 0.25)
+    assert sorted(r.doc_id for r in kept.collect()) == sorted(
+        r.doc_id for r in again.collect()
+    )
+
+
+def test_hash_sample_monotone_rates(ids_df):
+    low = {r.doc_id for r in hash_sample(ids_df, "doc_id", 0.1).collect()}
+    high = {r.doc_id for r in hash_sample(ids_df, "doc_id", 0.4).collect()}
+    assert low <= high  # upsampling only ADDS rows
+
+
 def test_stratified_rates_apply_per_stratum(ids_df):
     kept = stratified_sample(
         ids_df, "doc_id", "stratum", {"0": 0.8, "1": 0.2}, default_rate=0.0
@@ -140,8 +163,100 @@ def test_incremental_dedup_empty_base(spark):
 
 
 # ---------------------------------------------------------------------------
-# per-host caps, quality decisions, token shards
+# unigram logprob
 # ---------------------------------------------------------------------------
+
+
+def test_unigram_logprob_uniform_corpus(spark):
+    # 4 equally-frequent tokens → every doc's mean NLL is exactly 2 bits
+    df = spark.createDataFrame(
+        [(1, "a b"), (2, "c d")], "doc_id long, text string"
+    )
+    out = {r.doc_id: (r.nll_bits, r.n_toks) for r in unigram_logprob(df).collect()}
+    assert out == {1: (2.0, 2), 2: (2.0, 2)}
+
+
+def test_unigram_logprob_rare_tokens_score_higher(spark):
+    df = spark.createDataFrame(
+        [(1, "the the the the"), (2, "zyzzyva the")], "doc_id long, text string"
+    )
+    out = {r.doc_id: r.nll_bits for r in unigram_logprob(df).collect()}
+    assert out[2] > out[1]  # rare token → more surprising document
+
+
+def test_bigram_logprob_hand_computed(spark):
+    # target corpus is one doc "a a a a": the only bigram (a,a) has
+    # p = 0.7*(3/3) + 0.3*(4+1)/(4+1) = 1.0 → target doc scores exactly 0;
+    # the out-of-domain doc "b b" sees only the add-one unigram floor,
+    # p = 0.3 * (0+1)/(4+1) = 0.06 → -log2 ≈ 4.0589
+    df = spark.createDataFrame(
+        [(1, True, "a a a a"), (2, False, "b b"), (3, False, "a")],
+        "doc_id long, is_t boolean, text string",
+    )
+    out = {
+        r.doc_id: (r.n_bigrams, r.nll_bits)
+        for r in bigram_logprob(df, F.col("is_t")).collect()
+    }
+    assert out[1] == (3, 0.0)
+    assert out[2] == (1, 4.0589)
+    assert 3 not in out  # single-token doc has no bigrams → excluded
+
+
+def test_bigram_logprob_unseen_continuation_finite(spark):
+    # w1 seen in-domain but the (w1, w2) continuation unseen: the bigram
+    # term is zero and only the unigram floor carries — finite, and more
+    # surprising than the attested continuation
+    df = spark.createDataFrame(
+        [(1, True, "a b a b"), (2, False, "a b"), (3, False, "a z")],
+        "doc_id long, is_t boolean, text string",
+    )
+    out = {r.doc_id: r.nll_bits for r in bigram_logprob(df, F.col("is_t")).collect()}
+    assert all(v == v and v != float("inf") for v in out.values())
+    assert out[3] > out[2]
+
+
+def test_bm25_topk_hand_computed(spark):
+    import math
+
+    from b_pdf_parser_spark.operators.textstats import bm25_topk
+
+    docs = spark.createDataFrame(
+        [(1, "a b"), (2, "a a"), (3, "c")], "doc_id long, text string"
+    )
+    qs = spark.createDataFrame([(0, "a"), (0, "c")], "qid long, term string")
+    out = [
+        (r.rank, r.doc_id, r.n_hit, r.bm25)
+        for r in bm25_topk(docs, qs, k=3).orderBy("rank").collect()
+    ]
+
+    def score(tf, dl, df, n=3, avgdl=5 / 3, k1=1.2, b=0.75):
+        idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+        return round(idf * (tf * 2.2) / (tf + k1 * (0.25 + b * (dl / avgdl))), 4)
+
+    # doc 3 matches the rarer term 'c' (idf ln(8/3)) and is short → wins;
+    # doc 2 beats doc 1 on tf of 'a'
+    assert out == [
+        (1, 3, 1, score(1, 1, 1)),
+        (2, 2, 1, score(2, 2, 2)),
+        (3, 1, 1, score(1, 2, 2)),
+    ]
+
+
+def test_cc_luhn_scrub_validates_checksum(spark):
+    from b_pdf_parser_spark.operators.textstats import with_cc_scrub
+
+    df = spark.createDataFrame(
+        [(1, "pay 4539148803436467 or 4539148803436462 now"),
+         (2, "order 12345 plain")],
+        "id long, text string",
+    )
+    out = {r.id: r for r in with_cc_scrub(df).collect()}
+    # the first number is a genuinely Luhn-valid PAN, the second differs
+    # only in the check digit — candidates 2, valid 1, only the real one
+    # redacts; short digit runs are never candidates
+    assert (out[1].n_candidates, out[1].n_valid) == (2, 1)
+    assert out[1].scrubbed == "pay <CC> or 4539148803436462 now"
+    assert (out[2].n_candidates, out[2].n_valid) == (0, 0)
 
 
 def test_per_host_cap_exact_and_partitioning_independent(spark):
@@ -274,3 +389,82 @@ def test_token_shards_bucketed_matches_global_within_bucket(spark):
     assert {r["doc_id"] for r in token_shards(df, "doc_id", "text", 50).collect()} == {
         r["doc_id"] for r in out
     }
+
+
+def test_temperature_mix_properties(spark):
+    # strata with a 20:4:1 imbalance
+    rows = ([("en", i) for i in range(400)] + [("de", i + 1000) for i in range(80)]
+            + [("id", i + 2000) for i in range(20)])
+    df = spark.createDataFrame(
+        [(d, l) for l, d in rows], "doc_id long, lang string"
+    )
+    from b_pdf_parser_spark.operators.sampling import temperature_mix
+
+    def kept(t):
+        return {r["doc_id"] for r in temperature_mix(df, "doc_id", "lang", t).collect()}
+
+    def by_lang(ids):
+        en = sum(1 for i in ids if i < 1000)
+        de = sum(1 for i in ids if 1000 <= i < 2000)
+        other = sum(1 for i in ids if i >= 2000)
+        return en, de, other
+
+    # T=1: natural proportions — everything kept at target_max_rate=1.0
+    assert kept(1.0) == {d for _, d in rows}
+    # T>1 flattens: the smallest stratum keeps everything, the head is
+    # downsampled, and the kept head/tail ratio shrinks below the raw 20:1
+    k2 = kept(2.0)
+    en2, de2, id2 = by_lang(k2)
+    assert id2 == 20 and en2 < 400
+    assert en2 / max(id2, 1) < 400 / 20
+    # raising T only REMOVES docs (monotone hash thresholds): kept(4) ⊆ kept(2)
+    k4 = kept(4.0)
+    assert k4 <= k2
+    en4, de4, id4 = by_lang(k4)
+    assert id4 == 20 and en4 <= en2
+    # T→∞ limit direction: per-stratum kept counts approach each other
+    assert (en4 - id4) < (en2 - id2)
+    # determinism across partitioning
+    assert kept(2.0) == {
+        r["doc_id"]
+        for r in temperature_mix(df.repartition(13), "doc_id", "lang", 2.0).collect()
+    }
+
+
+def test_chunk_documents_overlap_and_coverage(spark):
+    from b_pdf_parser_spark.operators.sampling import chunk_documents
+
+    text = " ".join(f"w{i}" for i in range(150))
+    df = spark.createDataFrame([(1, text), (2, "short doc"), (3, "  ")],
+                               "doc_id long, text string")
+    out = chunk_documents(df, "doc_id", "text", tokens_per_chunk=64, stride=48)
+    rows = {(r["doc_id"], r["chunk_id"]): r for r in out.collect()}
+    # doc 1: starts 0,48,96,144 → 4 chunks; sizes 64,64,54,6
+    sizes = [rows[(1, c)]["n_chunk_toks"] for c in range(4)]
+    assert sizes == [64, 64, 54, 6]
+    # overlap: the last 16 tokens of chunk 0 are the first 16 of chunk 1
+    c0 = rows[(1, 0)]["chunk_text"].split(" ")
+    c1 = rows[(1, 1)]["chunk_text"].split(" ")
+    assert c0[48:] == c1[:16]
+    # full coverage in order: stitching at stride boundaries rebuilds the doc
+    stitched = c0[:48] + c1[:48] + rows[(1, 2)]["chunk_text"].split(" ")[:48] \
+        + rows[(1, 3)]["chunk_text"].split(" ")
+    assert stitched == text.split(" ")
+    # short doc → one chunk, whole text; whitespace-only doc → dropped
+    assert rows[(2, 0)]["chunk_text"] == "short doc"
+    assert not any(d == 3 for d, _ in rows)
+
+
+def test_cc_scrub_does_not_rewrite_digits_inside_longer_runs(spark):
+    from b_pdf_parser_spark.operators.textstats import with_cc_scrub
+
+    # the valid PAN appears standalone AND embedded in a 20-digit
+    # reference that is not even a candidate — only the standalone
+    # occurrence may redact
+    df = spark.createDataFrame(
+        [(1, "pay 4539148803436467 ref 94539148803436467919 end")],
+        "id long, text string",
+    )
+    r = with_cc_scrub(df).first()
+    assert (r.n_candidates, r.n_valid) == (1, 1)
+    assert r.scrubbed == "pay <CC> ref 94539148803436467919 end"
