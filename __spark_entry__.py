@@ -166,8 +166,7 @@ def q_near_dup_pairs(spark, sf):
 def q_near_dup_clusters(spark, sf):
     """Primary clustering path: LSH candidates → Jaccard confirm (0.5) →
     connected components. This is the composition that survives 100 TB;
-    ``dup_clusters`` (all-pairs edge source) remains as the small-scale
-    exact cross-check."""
+    ``dedup_decisions`` turns the same clusters into keep/drop verdicts."""
     from b_pdf_parser_spark.operators.dedup import (
         connected_components,
         ngram_jaccard_pairs,
@@ -214,8 +213,8 @@ def q_dedup_decisions(spark, sf):
 
 def _docs_with_footers(spark, sf):
     """documents with the per-site footer stratum appended to every text —
-    the boilerplate model both `repeated_lines` (detector) and
-    `strip_boilerplate` (remover) run on; mirrored in their oracles."""
+    the boilerplate model `strip_boilerplate` runs on; mirrored in its
+    oracle."""
     return _t(spark, sf, "documents").withColumn(
         "text",
         F.concat(
@@ -229,8 +228,8 @@ def _docs_with_footers(spark, sf):
 
 def q_strip_boilerplate(spark, sf):
     """Boilerplate line REMOVAL (C4 §2.2 rule): sentences shared by ≥3
-    documents are cut and the text rebuilt in order — the operator acting
-    on `repeated_lines`' signal. Linear explode/groupBy/join-back plan."""
+    documents are cut and the text rebuilt in order. Linear
+    explode/groupBy/join-back plan."""
     from b_pdf_parser_spark.operators.textstats import strip_boilerplate_lines
 
     return strip_boilerplate_lines(
@@ -480,59 +479,46 @@ def _formula_pages(spark, n_pdf: int = 160, n_html: int = 0, aes256: bool = Fals
     formula of the doc index. ``aes256`` upgrades 2 of the 160 PDFs to
     V5/R6 (see ``formula_statement_pdf``) — only ``extract_formula`` asks
     for it, since the R6 KDF costs ~2 s/doc across write+parse."""
+    import random as _random
+    from datetime import datetime
+
     import b_pdf_parser_spark
-    from b_pdf_parser_spark.sources.pages import PAGES_SCHEMA_DDL
+    from b_pdf_parser_spark.operators import map_rows
+    from b_pdf_parser_spark.sources.pages import (
+        PAGES_SCHEMA_DDL,
+        formula_statement_html,
+        formula_statement_pdf,
+        tag_soup_statement,
+    )
 
     b_pdf_parser_spark.ship_package(spark)
     base = spark.range(0, n_pdf + n_html, 1, 8)
 
-    def gen(batches):
-        from datetime import datetime
+    def gen(i):
+        i = int(i)
+        if i < n_pdf:
+            payload = formula_statement_pdf(i, aes256=aes256)
+            url = f"https://formula.example/{i:06d}"
+        else:
+            j = i - n_pdf
+            payload = formula_statement_html(j)
+            # serving-hazard rotation (values unchanged → the same
+            # oracle hash-checks them): UTF-16 both endiannesses,
+            # tag-soup markup (deterministic truncation draw)
+            if j % 4 == 1:
+                s = payload.decode("utf-8")
+                payload = (
+                    s.encode("utf-16") if j % 8 == 1
+                    else b"\xfe\xff" + s.encode("utf-16-be")
+                )
+            elif j % 4 == 3:
+                payload = tag_soup_statement(
+                    payload.decode("utf-8"), _random.Random(j)
+                ).encode("utf-8")
+            url = f"https://formula-html.example/{j:06d}"
+        return [(url, datetime(2024, 1, 1), payload, None, "id")]
 
-        import pandas as pd
-
-        import random as _random
-
-        from b_pdf_parser_spark.sources.pages import (
-            formula_statement_html,
-            formula_statement_pdf,
-            tag_soup_statement,
-        )
-
-        for b in batches:
-            rows = []
-            for i in b["id"]:
-                i = int(i)
-                if i < n_pdf:
-                    payload = formula_statement_pdf(i, aes256=aes256)
-                    url = f"https://formula.example/{i:06d}"
-                else:
-                    j = i - n_pdf
-                    payload = formula_statement_html(j)
-                    # serving-hazard rotation (values unchanged → the same
-                    # oracle hash-checks them): UTF-16 both endiannesses,
-                    # tag-soup markup (deterministic truncation draw)
-                    if j % 4 == 1:
-                        s = payload.decode("utf-8")
-                        payload = (
-                            s.encode("utf-16") if j % 8 == 1
-                            else b"\xfe\xff" + s.encode("utf-16-be")
-                        )
-                    elif j % 4 == 3:
-                        payload = tag_soup_statement(
-                            payload.decode("utf-8"), _random.Random(j)
-                        ).encode("utf-8")
-                    url = f"https://formula-html.example/{j:06d}"
-                rows.append({
-                    "url": url,
-                    "warc_ts": datetime(2024, 1, 1),
-                    "html": payload, "text": None, "lang": "id",
-                })
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return base.mapInPandas(gen, schema=PAGES_SCHEMA_DDL)
+    return map_rows(base, gen, PAGES_SCHEMA_DDL)
 
 
 def _formula_values(ext):
@@ -1095,7 +1081,7 @@ def q_quality_classifier(spark, sf):
 
 
 def q_pdf_ccitt_decode(spark, sf):
-    """The fax twin of ``pdf_jpeg_decode``: 120 deterministic PDFs embed
+    """The fax leg of the PDF image walk: 120 deterministic PDFs embed
     REAL CCITT Group 4 (ITU-T T.6) bi-level images — pass/horizontal/
     vertical mode coding over T.4 run alphabets, mostly non-byte-aligned
     widths — as /CCITTFaxDecode XObjects (/K -1, /DeviceGray, 1 bpc)

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+from typing import Callable, Iterable
+
+import pandas as pd
 from pyspark.sql import DataFrame
 
-__all__ = ["spread"]
+__all__ = ["spread", "map_rows", "tokens", "key_ddl"]
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -32,3 +35,45 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= p:
         return df
     return df.repartition(p)
+
+
+def map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str
+) -> DataFrame:
+    """The per-row Arrow kernel: one ``mapInPandas`` stage in which
+    ``fn(*values)`` runs once per row of ``df`` (values in ``df``'s column
+    order) and returns zero, one or many output rows, each a tuple in
+    ``schema``'s column order. Output rows keep input order within a batch.
+
+    This is the one place the Python boundary is written out: batch
+    iteration, row collection and frame assembly. ``fn`` owns its null
+    policy — a null input value reaches it as ``None`` (or NaN for a
+    numeric column). The assembled frame has integer column labels, so
+    Spark assigns its columns to ``schema`` by position; a batch with no
+    output rows yields no frame."""
+
+    def run(batches):
+        for b in batches:
+            rows = [
+                out
+                for row in b.itertuples(index=False, name=None)
+                for out in fn(*row)
+            ]
+            if rows:
+                yield pd.DataFrame(rows)
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def tokens(text: str) -> list:
+    """Python twin of Spark's ``split(lower(trim(text)), ' ')`` — the
+    tokenization the text kernels share with their DuckDB oracles: only
+    spaces are trimmed and split on, and the empty tokens between repeated
+    spaces are kept."""
+    return text.strip(" ").lower().split(" ")
+
+
+def key_ddl(df: DataFrame) -> str:
+    """DDL type of ``df``'s first column — the key a kernel carries into
+    its output schema unchanged."""
+    return df.schema.fields[0].dataType.simpleString()

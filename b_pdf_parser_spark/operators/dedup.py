@@ -33,11 +33,13 @@ kernels mirror ``split(lower(trim(text)), ' ')`` tokenization exactly.
 
 from __future__ import annotations
 
-import pandas as pd
+import hashlib
+from collections import Counter
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from . import spread
+from . import key_ddl, map_rows, spread, tokens
 
 __all__ = [
     "exact_dup_stats",
@@ -77,7 +79,7 @@ def _py_grams(text: str, n: int) -> list:
     split(lower(trim(text)), ' ') (empty tokens KEPT, as the old window
     form kept them), grams = every run of ``n`` consecutive tokens joined
     by one space."""
-    ws = text.strip(" ").lower().split(" ")
+    ws = tokens(text)
     return [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)]
 
 
@@ -96,65 +98,46 @@ def _doc_signature_frame(
     Computed in one Arrow batch pass (hashlib md5 in C); documents with
     null text or no full gram emit nothing, exactly like the old
     explode-based frames which simply had no rows for them."""
-    import hashlib
-
-    from typing import Iterator
-
     per_band = (k // bands) if (k is not None and bands is not None) else None
     want_mh = k is not None
-    cols = ["id"] + (["grams"] if with_grams else []) \
-        + (["mhs"] if want_mh else []) \
-        + (["band_keys"] if per_band is not None else [])
     src = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")))
-    id_ddl = src.schema.fields[0].dataType.simpleString()
-    ddl = f"id {id_ddl}" + (", grams array<string>" if with_grams else "") \
+    ddl = f"id {key_ddl(src)}" + (", grams array<string>" if with_grams else "") \
         + (", mhs array<string>" if want_mh else "") \
         + (", band_keys array<string>" if per_band is not None else "")
+    # md5(f"{seed}:{gram}") hashes the seed's prefix bytes followed by the
+    # gram's utf-8 bytes: encode each prefix once here and each distinct
+    # gram once per document
+    prefixes = [f"{seed}:".encode() for seed in range(k)] if want_mh else []
+    md5 = hashlib.md5
 
-    def run(batches: Iterator) -> Iterator:
-        md5 = hashlib.md5
-        for b in batches:
-            ids, grams_col, mhs_col, bk_col = [], [], [], []
-            for i, s in zip(b["id"], b["text"]):
-                if s is None:
-                    continue
-                grams = _py_grams(s, n)
-                if not grams:
-                    continue
-                gset = list(dict.fromkeys(grams))  # distinct, stable order
-                ids.append(i)
-                if with_grams:
-                    grams_col.append(gset)
-                if want_mh:
-                    mhs = [
-                        min(
-                            md5(f"{seed}:{g}".encode()).hexdigest()[:16]
-                            for g in gset
-                        )
-                        for seed in range(k)
-                    ]
-                    mhs_col.append(mhs)
-                    if per_band is not None:
-                        bk_col.append([
-                            ",".join(sorted(
-                                f"{s_}={mhs[s_]}"
-                                for s_ in range(bnd * per_band,
-                                                (bnd + 1) * per_band)
-                            ))
-                            for bnd in range(bands)
-                        ])
-            if not ids:
-                continue
-            data = {"id": ids}
-            if with_grams:
-                data["grams"] = grams_col
-            if want_mh:
-                data["mhs"] = mhs_col
-                if per_band is not None:
-                    data["band_keys"] = bk_col
-            yield pd.DataFrame(data, columns=cols)
+    def row(i, s):
+        if s is None:
+            return
+        grams = _py_grams(s, n)
+        if not grams:
+            return
+        gset = list(dict.fromkeys(grams))  # distinct, stable order
+        out = [i]
+        if with_grams:
+            out.append(gset)
+        if want_mh:
+            gbytes = [g.encode() for g in gset]
+            mhs = [
+                min(md5(p + g).hexdigest()[:16] for g in gbytes)
+                for p in prefixes
+            ]
+            out.append(mhs)
+            if per_band is not None:
+                out.append([
+                    ",".join(sorted(
+                        f"{s_}={mhs[s_]}"
+                        for s_ in range(bnd * per_band, (bnd + 1) * per_band)
+                    ))
+                    for bnd in range(bands)
+                ])
+        yield tuple(out)
 
-    return src.mapInPandas(run, schema=ddl)
+    return map_rows(src, row, ddl)
 
 
 def exact_dup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -382,33 +365,22 @@ def winnow_fingerprints(
     md5[:16] hashes, min over a window of ASCII hex strings is the same
     lexicographic min, full windows only, per-doc distinct."""
     src = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")))
-    id_ddl = src.schema.fields[0].dataType.simpleString()
+    md5 = hashlib.md5
 
-    def run(batches):
-        import hashlib
+    def row(i, s):
+        if s is None:
+            return
+        hs = [md5(g.encode()).hexdigest()[:16] for g in _py_grams(s, n)]
+        if len(hs) < w:
+            return
+        seen = set()
+        for p in range(len(hs) - w + 1):
+            m = min(hs[p:p + w])
+            if m not in seen:
+                seen.add(m)
+                yield i, m
 
-        md5 = hashlib.md5
-        for b in batches:
-            ids, fps = [], []
-            for i, s in zip(b["id"], b["text"]):
-                if s is None:
-                    continue
-                hs = [
-                    md5(g.encode()).hexdigest()[:16] for g in _py_grams(s, n)
-                ]
-                if len(hs) < w:
-                    continue
-                seen = set()
-                for p in range(len(hs) - w + 1):
-                    m = min(hs[p:p + w])
-                    if m not in seen:
-                        seen.add(m)
-                        ids.append(i)
-                        fps.append(m)
-            if ids:
-                yield pd.DataFrame({"id": ids, "fp": fps})
-
-    return src.mapInPandas(run, schema=f"id {id_ddl}, fp string")
+    return map_rows(src, row, f"id {key_ddl(src)}, fp string")
 
 
 def duplicate_spans(
@@ -442,33 +414,22 @@ def duplicate_spans(
     # plain count. Totals are identical: Σcnt = window count, dup windows =
     # Σcnt over hashes seen in ≥ 2 docs.
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    id_ddl = src.schema.fields[0].dataType.simpleString()
+    md5 = hashlib.md5
 
-    def run(batches):
-        import hashlib
-        from collections import Counter
+    def row(i, s):
+        if s is None:
+            return
+        ws_ = tokens(s)
+        if len(ws_) < w:
+            return
+        counts = Counter(
+            md5(" ".join(ws_[p:p + w]).encode()).hexdigest()
+            for p in range(len(ws_) - w + 1)
+        )
+        for h, c in counts.items():
+            yield i, h, c
 
-        md5 = hashlib.md5
-        for b in batches:
-            ids, hs, cs = [], [], []
-            for i, s in zip(b["doc_id"], b["text"]):
-                if s is None:
-                    continue
-                ws_ = s.strip(" ").lower().split(" ")
-                if len(ws_) < w:
-                    continue
-                counts = Counter(
-                    md5(" ".join(ws_[p:p + w]).encode()).hexdigest()
-                    for p in range(len(ws_) - w + 1)
-                )
-                for h, c in counts.items():
-                    ids.append(i)
-                    hs.append(h)
-                    cs.append(c)
-            if ids:
-                yield pd.DataFrame({"doc_id": ids, "h": hs, "cnt": cs})
-
-    wins = src.mapInPandas(run, schema=f"doc_id {id_ddl}, h string, cnt long")
+    wins = map_rows(src, row, f"doc_id {key_ddl(src)}, h string, cnt long")
     # referenced twice (dup-set build + probe); checkpoint so the kernel
     # pass runs once
     wins = wins.localCheckpoint(eager=False)
@@ -506,31 +467,20 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     rule; docs with no non-empty token emit nothing (the old groupBy had
     no rows for them)."""
     src = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")))
-    id_ddl = src.schema.fields[0].dataType.simpleString()
     odd = set("13579bdf")
+    md5 = hashlib.md5
 
-    def run(batches):
-        import hashlib
+    def row(i, s):
+        if s is None:
+            return
+        ws_ = [w for w in tokens(s) if w != ""]
+        if not ws_:
+            return
+        votes = [0] * bits
+        for w in ws_:
+            h = md5(w.encode()).hexdigest()
+            for j in range(bits):
+                votes[j] += 1 if h[j] in odd else -1
+        yield i, sum((1 << j) for j in range(bits) if votes[j] > 0)
 
-        md5 = hashlib.md5
-        for b in batches:
-            ids, vals = [], []
-            for i, s in zip(b["id"], b["text"]):
-                if s is None:
-                    continue
-                ws_ = [w for w in s.strip(" ").lower().split(" ") if w != ""]
-                if not ws_:
-                    continue
-                votes = [0] * bits
-                for w in ws_:
-                    h = md5(w.encode()).hexdigest()
-                    for j in range(bits):
-                        votes[j] += 1 if h[j] in odd else -1
-                ids.append(i)
-                vals.append(
-                    sum((1 << j) for j in range(bits) if votes[j] > 0)
-                )
-            if ids:
-                yield pd.DataFrame({"id": ids, "simhash": vals})
-
-    return src.mapInPandas(run, schema=f"id {id_ddl}, simhash long")
+    return map_rows(src, row, f"id {key_ddl(src)}, simhash long")

@@ -50,6 +50,7 @@ from ..htmlmodel import _decode_html_bytes, extract_html_blocks, extract_html_ta
 
 _TABLE_HINT_RE = _re.compile(r"<table", _re.I)
 from ..pdfmodel import PdfError, extract_pdf_pages_and_tables
+from . import map_rows
 
 __all__ = [
     "EXTRACTED_SCHEMA",
@@ -325,21 +326,16 @@ def extract_kind_audit(
     inside ``mapInPandas``). A parity test pins per-kind/error counts
     equal to :func:`extract_pages` on the same corpus."""
 
-    def audit_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            per_doc = [
-                _extract_one(u, p) for u, p in zip(b["url"].tolist(), b["html"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "kind": [d["kind"] for d in per_doc],
-                    "error": [d["error"] for d in per_doc],
-                }
-            )
+    def audit_row(url, html):
+        d = _extract_one(url, html)
+        return [(d["kind"], d["error"])]
 
-    return _shuffled(
-        pages, num_partitions, checkpoint_partitions, skew_threshold
-    ).mapInPandas(audit_batch, schema="kind string, error string")
+    return map_rows(
+        _shuffled(pages, num_partitions, checkpoint_partitions, skew_threshold)
+        .select("url", "html"),
+        audit_row,
+        "kind string, error string",
+    )
 
 
 def extract_partition_walls(

@@ -35,10 +35,11 @@ from __future__ import annotations
 
 import math
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from . import map_rows
 
 __all__ = [
     "MEDIA_SCHEMA_DDL",
@@ -92,21 +93,13 @@ def encode_fake_media(media_id: int, kind: str = "img") -> bytes:
 
 def synth_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     base = spark.range(0, n, 1, num_partitions)
+    kinds = ["img", "aud", "vid"]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            kinds = ["img", "aud", "vid"]
-            rows = [
-                {
-                    "media_id": int(i),
-                    "kind": kinds[int(i) % 3],
-                    "payload": encode_fake_media(int(i), kinds[int(i) % 3]),
-                }
-                for i in b["id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
+    def gen(i):
+        kind = kinds[int(i) % 3]
+        return [(int(i), kind, encode_fake_media(int(i), kind))]
 
-    return base.mapInPandas(gen, schema=MEDIA_SCHEMA_DDL)
+    return map_rows(base, gen, MEDIA_SCHEMA_DDL)
 
 
 def _decode_one(media_id: int, kind: str, payload: Optional[bytes]) -> dict:
@@ -165,19 +158,16 @@ def decode_features(media: DataFrame) -> DataFrame:
     """Header parse + byte-entropy features via Arrow batches (one Python
     dispatch per payload, never per byte-row)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                _decode_one(int(i), k, p)
-                for i, k, p in zip(b["media_id"], b["kind"], b["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "width", "height", "channels",
-                         "n_bytes", "byte_entropy", "error"],
-            )
+    cols = ["media_id", "kind", "width", "height", "channels",
+            "n_bytes", "byte_entropy", "error"]
 
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA_DDL)
+    def row(i, k, p):
+        d = _decode_one(int(i), k, p)
+        return [tuple(d[c] for c in cols)]
+
+    return map_rows(
+        media.select("media_id", "kind", "payload"), row, FEATURES_SCHEMA_DDL
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -630,19 +620,10 @@ def encode_real_media(i: int) -> bytes:
 def synth_real_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     base = spark.range(0, n, 1, num_partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                {
-                    "media_id": int(i),
-                    "kind": real_media_dims(int(i))["fmt"],
-                    "payload": encode_real_media(int(i)),
-                }
-                for i in b["id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
+    def gen(i):
+        return [(int(i), real_media_dims(int(i))["fmt"], encode_real_media(int(i)))]
 
-    return base.mapInPandas(gen, schema=MEDIA_SCHEMA_DDL)
+    return map_rows(base, gen, MEDIA_SCHEMA_DDL)
 
 
 def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
@@ -745,17 +726,16 @@ def real_media_features(media: DataFrame) -> DataFrame:
     values (top-down RGB pixels / int16 samples) reduce to order-sensitive
     integer sums a SQL oracle can recompute from the generating formulas."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "fmt", "width", "height", "channels",
-                "sample_rate", "n_values", "value_sum", "weighted_sum", "error"]
-        for b in batches:
-            rows = [
-                _real_decode_one(int(i), p)
-                for i, p in zip(b["media_id"], b["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
+    cols = ["media_id", "fmt", "width", "height", "channels",
+            "sample_rate", "n_values", "value_sum", "weighted_sum", "error"]
 
-    return media.mapInPandas(run, schema=REAL_FEATURES_SCHEMA_DDL)
+    def row(i, p):
+        d = _real_decode_one(int(i), p)
+        return [tuple(d[c] for c in cols)]
+
+    return map_rows(
+        media.select("media_id", "payload"), row, REAL_FEATURES_SCHEMA_DDL
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -777,34 +757,27 @@ def synth_imagedoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     emission) — every byte a pure function of doc_id, so a DuckDB oracle
     can recompute the expected inventory while the Spark path exercises
     the REAL writer → parser roundtrip."""
+    from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
+
     base = spark.range(0, n, 1, num_partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
+    def gen(raw):
+        i = int(raw)
+        spans = [[(40.0, 700.0, f"image doc {i}"),
+                  (40.0, 680.0, "with pictures")]]
+        imgs = [
+            make_image(
+                0,
+                8 + (i + j) % 32,
+                8 + (i * j) % 24,
+                _IMG_FILTERS[(i + j) % 3],
+                seed=i * 17 + j,
+            )
+            for j in range(i % 4)
+        ]
+        return [(i, build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs))]
 
-        for b in batches:
-            rows = []
-            for raw in b["id"]:
-                i = int(raw)
-                spans = [[(40.0, 700.0, f"image doc {i}"),
-                          (40.0, 680.0, "with pictures")]]
-                imgs = [
-                    make_image(
-                        0,
-                        8 + (i + j) % 32,
-                        8 + (i * j) % 24,
-                        _IMG_FILTERS[(i + j) % 3],
-                        seed=i * 17 + j,
-                    )
-                    for j in range(i % 4)
-                ]
-                rows.append({
-                    "doc_id": i,
-                    "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
-                })
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
-
-    return base.mapInPandas(gen, schema=IMAGEDOC_SCHEMA_DDL)
+    return map_rows(base, gen, IMAGEDOC_SCHEMA_DDL)
 
 
 def pdf_image_features(docs: DataFrame) -> DataFrame:
@@ -812,25 +785,22 @@ def pdf_image_features(docs: DataFrame) -> DataFrame:
     Python dispatch per document; pixels are never decoded — see
     ``pdfmodel.image_inventory``)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from b_pdf_parser_spark.pdfmodel import image_inventory
+    from b_pdf_parser_spark.pdfmodel import image_inventory
 
-        cols = ["doc_id", "page", "name", "width", "height", "filter", "n_bytes"]
-        for b in batches:
-            rows = []
-            for did, pdf in zip(b["doc_id"], b["pdf"]):
-                try:
-                    for rec in image_inventory(bytes(pdf)):
-                        rows.append({"doc_id": int(did), **rec})
-                except Exception as e:  # corrupt doc → error row, job survives
-                    rows.append({
-                        "doc_id": int(did), "page": -1, "name": "",
-                        "width": 0, "height": 0,
-                        "filter": f"error:{type(e).__name__}", "n_bytes": 0,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    cols = ["page", "name", "width", "height", "filter", "n_bytes"]
 
-    return docs.mapInPandas(run, schema=IMAGE_INV_SCHEMA_DDL)
+    def row(did, pdf):
+        rows = []
+        try:
+            for rec in image_inventory(bytes(pdf)):
+                rows.append((int(did), *(rec[c] for c in cols)))
+        except Exception as e:  # corrupt doc → error row, job survives
+            rows.append(
+                (int(did), -1, "", 0, 0, f"error:{type(e).__name__}", 0)
+            )
+        return rows
+
+    return map_rows(docs.select("doc_id", "pdf"), row, IMAGE_INV_SCHEMA_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -887,53 +857,46 @@ def synth_ccittdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     The decoded pixels are identical across regimes (bi-level fax coding
     is lossless), so the oracle formulas don't depend on K — only the
     decode PATH does, which is exactly what the rotation pins."""
+    from b_pdf_parser_spark.ccittcodec import encode_g3, encode_g4
+    from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
+
     base = spark.range(0, n, 1, num_partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from b_pdf_parser_spark.ccittcodec import encode_g3, encode_g4
-        from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
+    def gen(raw):
+        i = int(raw)
+        spans = [[(40.0, 700.0, f"ccitt doc {i}")]]
+        imgs = []
+        for j in range(1 + i % 2):
+            d = _ccitt_xobject_dims(i, j)
+            px = _ccitt_pattern_pixels(i, j, d["w"], d["h"])
+            k = (-1, 0, 4)[(i + j) % 3]
+            # half the K=0 images ship the PDF-DEFAULT shape:
+            # /EndOfLine false, rows packed with no framing
+            eol = not (k == 0 and (i // 3) % 2 == 0)
+            # rotate the remaining DecodeParms surface too:
+            # /EncodedByteAlign pads every row/EOL to a byte
+            # boundary; /BlackIs1 flips what the decoded samples
+            # MEAN (consumer inverts) without touching the coded
+            # runs — the oracle inverts in lockstep
+            byte_align = (i * 3 + j) % 4 == 1
+            black1 = (i + j) % 5 == 2
+            if k < 0:
+                enc = encode_g4(d["w"], d["h"], px, byte_align=byte_align)
+            else:
+                enc = encode_g3(
+                    d["w"], d["h"], px, k=k, eol=eol,
+                    byte_align=byte_align,
+                )
+            imgs.append({
+                "page": 0, "width": d["w"], "height": d["h"],
+                "filter": "CCITTFaxDecode", "k": k, "eol": eol,
+                "byte_align": byte_align, "black_is_1": black1,
+                "data": enc,
+            })
+        imgs.append(make_image(0, 16, 8, "DCTDecode", seed=i))
+        return [(i, build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs))]
 
-        for b in batches:
-            rows = []
-            for raw in b["id"]:
-                i = int(raw)
-                spans = [[(40.0, 700.0, f"ccitt doc {i}")]]
-                imgs = []
-                for j in range(1 + i % 2):
-                    d = _ccitt_xobject_dims(i, j)
-                    px = _ccitt_pattern_pixels(i, j, d["w"], d["h"])
-                    k = (-1, 0, 4)[(i + j) % 3]
-                    # half the K=0 images ship the PDF-DEFAULT shape:
-                    # /EndOfLine false, rows packed with no framing
-                    eol = not (k == 0 and (i // 3) % 2 == 0)
-                    # rotate the remaining DecodeParms surface too:
-                    # /EncodedByteAlign pads every row/EOL to a byte
-                    # boundary; /BlackIs1 flips what the decoded samples
-                    # MEAN (consumer inverts) without touching the coded
-                    # runs — the oracle inverts in lockstep
-                    byte_align = (i * 3 + j) % 4 == 1
-                    black1 = (i + j) % 5 == 2
-                    if k < 0:
-                        enc = encode_g4(d["w"], d["h"], px, byte_align=byte_align)
-                    else:
-                        enc = encode_g3(
-                            d["w"], d["h"], px, k=k, eol=eol,
-                            byte_align=byte_align,
-                        )
-                    imgs.append({
-                        "page": 0, "width": d["w"], "height": d["h"],
-                        "filter": "CCITTFaxDecode", "k": k, "eol": eol,
-                        "byte_align": byte_align, "black_is_1": black1,
-                        "data": enc,
-                    })
-                imgs.append(make_image(0, 16, 8, "DCTDecode", seed=i))
-                rows.append({
-                    "doc_id": i,
-                    "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
-                })
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
-
-    return base.mapInPandas(gen, schema=IMAGEDOC_SCHEMA_DDL)
+    return map_rows(base, gen, IMAGEDOC_SCHEMA_DDL)
 
 
 def pdf_ccitt_pixel_features(docs: DataFrame) -> DataFrame:
@@ -946,54 +909,41 @@ def pdf_ccitt_pixel_features(docs: DataFrame) -> DataFrame:
     routed past the codec. One Arrow-batch Python dispatch per
     document."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from b_pdf_parser_spark.ccittcodec import decode_g3, decode_g4
-        from b_pdf_parser_spark.pdfmodel import image_inventory
+    from b_pdf_parser_spark.ccittcodec import decode_g3, decode_g4
+    from b_pdf_parser_spark.pdfmodel import image_inventory
 
-        cols = ["doc_id", "page", "name", "width", "height", "channels",
-                "n_values", "value_sum", "weighted_sum", "error"]
-        for b in batches:
-            rows = []
-            for did, pdf in zip(b["doc_id"], b["pdf"]):
-                try:
-                    for rec in image_inventory(bytes(pdf), with_data=True):
-                        if rec["filter"] != "CCITTFaxDecode":
-                            continue
-                        ccitt_k = rec.get("ccitt_k", 0)
-                        eba = rec.get("ccitt_byte_align", False)
-                        if ccitt_k < 0:
-                            px = decode_g4(
-                                rec["data"], rec["width"], rec["height"],
-                                byte_align=eba,
-                            )
-                        else:
-                            px = decode_g3(
-                                rec["data"], rec["width"], rec["height"],
-                                k=ccitt_k, byte_align=eba,
-                            )
-                        if rec.get("ccitt_black1", False):
-                            # BlackIs1: black decodes to 1-bits, so the
-                            # conforming sample values are inverted
-                            px = bytes(255 - v for v in px)
-                        rows.append({
-                            "doc_id": int(did), "page": rec["page"],
-                            "name": rec["name"], "width": rec["width"],
-                            "height": rec["height"], "channels": 1,
-                            "n_values": len(px),
-                            "value_sum": int(sum(px)),
-                            "weighted_sum": int(
-                                sum((k + 1) * v for k, v in enumerate(px))
-                            ),
-                            "error": None,
-                        })
-                except Exception as e:  # corrupt doc/stream → error row
-                    rows.append({
-                        "doc_id": int(did), "page": -1, "name": "",
-                        "width": None, "height": None, "channels": None,
-                        "n_values": None, "value_sum": None,
-                        "weighted_sum": None,
-                        "error": f"{type(e).__name__}: {e}",
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def row(did, pdf):
+        rows = []
+        try:
+            for rec in image_inventory(bytes(pdf), with_data=True):
+                if rec["filter"] != "CCITTFaxDecode":
+                    continue
+                ccitt_k = rec.get("ccitt_k", 0)
+                eba = rec.get("ccitt_byte_align", False)
+                if ccitt_k < 0:
+                    px = decode_g4(
+                        rec["data"], rec["width"], rec["height"],
+                        byte_align=eba,
+                    )
+                else:
+                    px = decode_g3(
+                        rec["data"], rec["width"], rec["height"],
+                        k=ccitt_k, byte_align=eba,
+                    )
+                if rec.get("ccitt_black1", False):
+                    # BlackIs1: black decodes to 1-bits, so the
+                    # conforming sample values are inverted
+                    px = bytes(255 - v for v in px)
+                rows.append((
+                    int(did), rec["page"], rec["name"], rec["width"],
+                    rec["height"], 1, len(px), int(sum(px)),
+                    int(sum((k + 1) * v for k, v in enumerate(px))), None,
+                ))
+        except Exception as e:  # corrupt doc/stream → error row
+            rows.append((
+                int(did), -1, "", None, None, None, None, None, None,
+                f"{type(e).__name__}: {e}",
+            ))
+        return rows
 
-    return docs.mapInPandas(run, schema=JPEG_PIX_SCHEMA_DDL)
+    return map_rows(docs.select("doc_id", "pdf"), row, JPEG_PIX_SCHEMA_DDL)

@@ -117,10 +117,10 @@ def _np_rows(col) -> "object":
 
 def _np_sq_l2_seq(X, C):
     """(n,dim) × (k,dim) → (n,k) squared-L2 matrix with the EXACT fold order
-    of ``_sq_l2_cols``: every D[r,c] starts at 0.0 and adds (x_i − c_i)² in
-    ascending dimension order — vectorized across (row, centroid) pairs,
-    sequential across dims, so each entry is bit-identical to the
-    relational fold (and to the DuckDB oracle's ``list_reduce``). This is
+    of the DuckDB oracles' ``list_reduce``: every D[r,c] starts at 0.0 and
+    adds (x_i − c_i)² in ascending dimension order — vectorized across
+    (row, centroid) pairs, sequential across dims, so each entry is
+    bit-identical to the oracle's left-to-right fold. This is
     the guide-§4.2 shape: Spark does distribution, numpy does the batch
     arithmetic — ~12× faster than the interpreted higher-order fold on the
     64-dim test embeddings."""
@@ -180,11 +180,11 @@ def _np_cosine_score(pairs: DataFrame, qv: str, nv: str) -> DataFrame:
 
 
 def _assign_np(df: DataFrame, C, cid_vals, n: int, cid_ddl: str) -> DataFrame:
-    """mapInPandas twin of :func:`_assign` for a DRIVER-RESIDENT centroid
-    table (the k·dim Python list every k-means caller already holds):
-    identical decisions — argmin / stable top-``n`` over (d, cid) with the
-    cid-ascending tie-break (``cid_vals`` MUST be ascending, so numpy's
-    first-minimum / stable sort reproduces ``min_by(struct(d, cid))``
+    """Nearest-centroid assignment in mapInPandas for a DRIVER-RESIDENT
+    centroid table (the k·dim Python list every k-means caller already
+    holds): argmin / stable top-``n`` over (d, cid) with the cid-ascending
+    tie-break (``cid_vals`` MUST be ascending, so numpy's first-minimum /
+    stable sort reproduces the oracles' ``ORDER BY d, cid`` ranking
     exactly) — and bit-identical distances via :func:`_np_sq_l2_seq`.
     The matrix ships to executors once via ``SparkContext.broadcast``
     (the bloom-probe idiom), not per-task closure capture."""

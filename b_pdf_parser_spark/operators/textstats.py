@@ -15,8 +15,13 @@ stage as the scan, and columnar parquet scans prune to ``text`` only.
 
 from __future__ import annotations
 
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
+
+from . import key_ddl, map_rows, tokens
 
 __all__ = [
     "STOPWORDS",
@@ -115,69 +120,48 @@ def fingerprint(c: Column) -> Column:
 def gopher_quality_frame(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """DataFrame form of :func:`gopher_rules` + the conjunction, as one
-    Arrow batch kernel (round-7): every rule is per-document and the old
-    column expressions evaluated three interpreted per-token filter
-    lambdas per doc. Value-exact twin — same tokenization, unrounded
+    """Gopher quality rules (word count, mean word length, symbol, alpha
+    and stopword ratios) + their conjunction, as one Arrow batch kernel
+    (round-7): every rule is per-document and the old column expressions
+    evaluated three interpreted per-token filter lambdas per doc. Value-exact twin — same tokenization, unrounded
     mean-word-length bounds, rlike('[#…]') ≡ contains-any, null text →
     all-null rules and null conjunction, exactly like the old
     null-propagating expressions."""
-    import pandas as pd
-
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    id_ddl = src.schema.fields[0].dataType.simpleString()
     stop = set(STOPWORDS["en"])
+    sym = set("#…")
 
-    def run(batches):
-        sym = set("#…")
+    def row(i, s):
+        if s is None:
+            return [(i, None, None, None, None, None, None)]
+        t = s.strip(" ")
+        if t == "":
+            nt = 0
+            toks = []
+        else:
+            toks = tokens(s)
+            nt = len(toks)
+        wc_ok = 50 <= nt <= 100_000
+        if nt == 0:
+            mwl_ok = False  # mwl 0.0 is outside [3, 10]
+            sym_ok = False
+            alpha_ok = False
+        else:
+            mwl = len(t.replace(" ", "")) / nt
+            mwl_ok = 3.0 <= mwl <= 10.0
+            n_sym = sum(1 for w in toks if any(c in sym for c in w))
+            sym_ok = n_sym / nt <= 0.1
+            n_alpha = sum(1 for w in toks if any("a" <= c <= "z" for c in w))
+            alpha_ok = n_alpha / nt >= 0.8
+        stop_ok = sum(1 for w in toks if w in stop) >= 2
+        return [(i, wc_ok, mwl_ok, sym_ok, alpha_ok, stop_ok,
+                 wc_ok and mwl_ok and sym_ok and alpha_ok and stop_ok)]
 
-        for b in batches:
-            rows = {k: [] for k in ("doc_id", "word_count_ok", "mean_word_len_ok",
-                                    "symbol_ratio_ok", "alpha_ratio_ok",
-                                    "stopwords_ok", "passes")}
-            for i, s in zip(b["doc_id"], b["text"]):
-                rows["doc_id"].append(i)
-                if s is None:
-                    for k in ("word_count_ok", "mean_word_len_ok", "symbol_ratio_ok",
-                              "alpha_ratio_ok", "stopwords_ok", "passes"):
-                        rows[k].append(None)
-                    continue
-                t = s.strip(" ")
-                if t == "":
-                    nt = 0
-                    toks = []
-                else:
-                    toks = t.lower().split(" ")
-                    nt = len(toks)
-                wc_ok = 50 <= nt <= 100_000
-                if nt == 0:
-                    mwl_ok = False  # mwl 0.0 is outside [3, 10]
-                    sym_ok = False
-                    alpha_ok = False
-                else:
-                    mwl = len(t.replace(" ", "")) / nt
-                    mwl_ok = 3.0 <= mwl <= 10.0
-                    n_sym = sum(1 for w in toks if any(c in sym for c in w))
-                    sym_ok = n_sym / nt <= 0.1
-                    n_alpha = sum(
-                        1 for w in toks if any("a" <= c <= "z" for c in w)
-                    )
-                    alpha_ok = n_alpha / nt >= 0.8
-                stop_ok = sum(1 for w in toks if w in stop) >= 2
-                rows["word_count_ok"].append(wc_ok)
-                rows["mean_word_len_ok"].append(mwl_ok)
-                rows["symbol_ratio_ok"].append(sym_ok)
-                rows["alpha_ratio_ok"].append(alpha_ok)
-                rows["stopwords_ok"].append(stop_ok)
-                rows["passes"].append(
-                    wc_ok and mwl_ok and sym_ok and alpha_ok and stop_ok
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"doc_id {id_ddl}, word_count_ok boolean, mean_word_len_ok boolean,"
+    return map_rows(
+        src,
+        row,
+        (
+            f"doc_id {key_ddl(src)}, word_count_ok boolean, mean_word_len_ok boolean,"
             " symbol_ratio_ok boolean, alpha_ratio_ok boolean,"
             " stopwords_ok boolean, passes boolean"
         ),
@@ -188,43 +172,30 @@ def langid_frame(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     out_col: str = "lang_guess",
 ) -> DataFrame:
-    """DataFrame form of :func:`langid` as one Arrow batch kernel
-    (round-7): the stopword votes ran five interpreted filter lambdas per
-    document. Decision-exact twin of ``with_langid``'s nested CASE: a
+    """Stopword-vote language guess as one Arrow batch kernel (round-7):
+    the old column form ran five interpreted filter lambdas per document.
+    Decision-exact twin of the ``langid`` oracle's nested CASE: a
     language wins if its vote is > 0 and ≥ every LOWER-priority
     language's vote, checked in the fixed en > de > fr > es > id order;
     zero votes everywhere (or null text) → 'und'."""
-    import pandas as pd
-
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    id_ddl = src.schema.fields[0].dataType.simpleString()
     stop_sets = {lang: set(words) for lang, words in STOPWORDS.items()}
 
-    def run(batches):
-        for b in batches:
-            ids, langs = [], []
-            for i, s in zip(b["doc_id"], b["text"]):
-                ids.append(i)
-                if s is None:
-                    langs.append("und")
-                    continue
-                toks = s.strip(" ").lower().split(" ")
-                votes = {
-                    lang: sum(1 for w in toks if w in ws)
-                    for lang, ws in stop_sets.items()
-                }
-                guess = "und"
-                for k, lang in enumerate(_LANG_ORDER):
-                    v = votes[lang]
-                    if v > 0 and all(
-                        v >= votes[later] for later in _LANG_ORDER[k + 1:]
-                    ):
-                        guess = lang
-                        break
-                langs.append(guess)
-            yield pd.DataFrame({"doc_id": ids, out_col: langs})
+    def row(i, s):
+        if s is None:
+            return [(i, "und")]
+        toks = tokens(s)
+        votes = {
+            lang: sum(1 for w in toks if w in ws)
+            for lang, ws in stop_sets.items()
+        }
+        for k, lang in enumerate(_LANG_ORDER):
+            v = votes[lang]
+            if v > 0 and all(v >= votes[later] for later in _LANG_ORDER[k + 1:]):
+                return [(i, lang)]
+        return [(i, "und")]
 
-    return src.mapInPandas(run, schema=f"doc_id {id_ddl}, {out_col} string")
+    return map_rows(src, row, f"doc_id {key_ddl(src)}, {out_col} string")
 
 
 def unigram_logprob(
@@ -482,7 +453,8 @@ def intra_doc_repetition(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Gopher-style *repetition* signals (Rae et al. 2021 §A1.1 — the other
-    half of the quality rules, which ``gopher_rules`` doesn't cover): per
+    half of the quality rules, which :func:`gopher_quality_frame` doesn't
+    cover): per
     document,
 
     * ``top_2gram_frac`` — fraction of all word 2-gram instances taken by
@@ -499,37 +471,24 @@ def intra_doc_repetition(
     unrounded int/int IEEE doubles (Python and JVM divide identical exact
     integers), so the DuckDB oracle remains bit-identical.
     """
-    import pandas as pd
-
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    id_ddl = src.schema.fields[0].dataType.simpleString()
 
-    def run(batches):
-        from collections import Counter
+    def row(i, s):
+        if s is None:
+            return []
+        ws = tokens(s)
+        if len(ws) < 3:
+            return []
+        c2 = Counter(" ".join(ws[p:p + 2]) for p in range(len(ws) - 1))
+        c3 = Counter(" ".join(ws[p:p + 3]) for p in range(len(ws) - 2))
+        n2 = len(ws) - 1
+        n3 = len(ws) - 2
+        return [(i, max(c2.values()) / n2,
+                 sum(c for c in c3.values() if c >= 2) / n3)]
 
-        for b in batches:
-            ids, t2s, d3s = [], [], []
-            for i, s in zip(b["doc_id"], b["text"]):
-                if s is None:
-                    continue
-                ws = s.strip(" ").lower().split(" ")
-                if len(ws) < 3:
-                    continue
-                c2 = Counter(" ".join(ws[p:p + 2]) for p in range(len(ws) - 1))
-                c3 = Counter(" ".join(ws[p:p + 3]) for p in range(len(ws) - 2))
-                n2 = len(ws) - 1
-                n3 = len(ws) - 2
-                ids.append(i)
-                t2s.append(max(c2.values()) / n2)
-                d3s.append(sum(c for c in c3.values() if c >= 2) / n3)
-            if ids:
-                yield pd.DataFrame(
-                    {"doc_id": ids, "top_2gram_frac": t2s, "dup_3gram_frac": d3s}
-                )
-
-    return src.mapInPandas(
-        run,
-        schema=f"doc_id {id_ddl}, top_2gram_frac double, dup_3gram_frac double",
+    return map_rows(
+        src, row,
+        f"doc_id {key_ddl(src)}, top_2gram_frac double, dup_3gram_frac double",
     )
 
 
@@ -558,53 +517,39 @@ def quality_decisions(
     (a null text satisfies no rule and lands on 'ok'). The CASE is
     mirrored verbatim in the DuckDB oracle, which stays the referee.
     """
-    import pandas as pd
-
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    id_ddl = src.schema.fields[0].dataType.simpleString()
     stop = set(STOPWORDS["en"])
+    q4 = Decimal("0.0001")
 
-    def run(batches):
-        from collections import Counter
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q4 = Decimal("0.0001")
-
-        def reason_for(s):
-            if s is None:
-                return "ok"  # every rule's condition is null → fall through
-            t = s.strip(" ")
-            nt = 0 if t == "" else len(t.split(" "))
-            if nt < min_tokens:
-                return "word_count"
-            toks = t.lower().split(" ")
-            chars = len(t.replace(" ", ""))
-            mwl = float(
-                Decimal(repr(chars / nt)).quantize(q4, rounding=ROUND_HALF_UP)
+    def reason_for(s):
+        if s is None:
+            return "ok"  # every rule's condition is null → fall through
+        t = s.strip(" ")
+        toks = tokens(s)
+        nt = 0 if t == "" else len(toks)
+        if nt < min_tokens:
+            return "word_count"
+        chars = len(t.replace(" ", ""))
+        mwl = float(
+            Decimal(repr(chars / nt)).quantize(q4, rounding=ROUND_HALF_UP)
+        )
+        if mwl < 3.0 or mwl > 10.0:
+            return "mean_word_len"
+        if nt >= 2:
+            c2 = Counter(
+                toks[p] + " " + toks[p + 1] for p in range(nt - 1)
             )
-            if mwl < 3.0 or mwl > 10.0:
-                return "mean_word_len"
-            if nt >= 2:
-                c2 = Counter(
-                    toks[p] + " " + toks[p + 1] for p in range(nt - 1)
-                )
-                if max(c2.values()) / (nt - 1) > top2_max:
-                    return "repetition"
-            if sum(1 for w in toks if w in stop) < 2:
-                return "stopwords"
-            return "ok"
+            if max(c2.values()) / (nt - 1) > top2_max:
+                return "repetition"
+        if sum(1 for w in toks if w in stop) < 2:
+            return "stopwords"
+        return "ok"
 
-        for b in batches:
-            reasons = [reason_for(s) for s in b["text"]]
-            yield pd.DataFrame({
-                "doc_id": list(b["doc_id"]),
-                "keep": [r == "ok" for r in reasons],
-                "reason": reasons,
-            })
+    def row(i, s):
+        reason = reason_for(s)
+        return [(i, reason == "ok", reason)]
 
-    out = src.mapInPandas(
-        run, schema=f"doc_id {id_ddl}, keep boolean, reason string"
-    )
+    out = map_rows(src, row, f"doc_id {key_ddl(src)}, keep boolean, reason string")
     return out.withColumnRenamed("doc_id", id_col) if id_col != "doc_id" else out
 
 
@@ -615,8 +560,7 @@ def strip_boilerplate_lines(
     """Boilerplate line REMOVAL — the C4 cleanup rule (Raffel et al. 2020
     §2.2 dropped lines occurring ≥3 times in the corpus): sentences shared
     by ≥ ``min_docs`` distinct documents are cut from every document, and
-    the text is rebuilt in original order. The detector twin is
-    ``q_repeated_lines``; this is the operator that acts on its signal.
+    the text is rebuilt in original order.
 
     Returns (doc_id, clean_text, n_lines, n_dropped). ``clean_text`` joins
     surviving sentences with ``". "`` — a normalized (not byte-preserving)

@@ -26,7 +26,7 @@ from __future__ import annotations
 import random
 from datetime import datetime, timedelta
 from functools import lru_cache
-from typing import Any, Dict, Iterator, List, Optional, Tuple
+from typing import Any, Dict, List, Optional, Tuple
 
 from ..pdfwriter import build_pdf, make_image, pdf_from_lines
 
@@ -805,14 +805,13 @@ def synth_pages_df(spark, n: int, seed: int = 42, num_partitions: Optional[int] 
     (keyed only on (seed, i)); no driver loop, no broadcast of payloads —
     the same code path scales from 10^3 test rows to 10^9 bench rows.
     """
-    import pandas as pd
+    from ..operators import map_rows
 
     parts = num_partitions or max(spark.sparkContext.defaultParallelism, 8)
     base = spark.range(0, n, 1, parts)
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = [make_page_row(int(i), seed) for i in b["id"]]
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
+    def gen(i):
+        r = make_page_row(int(i), seed)
+        return [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"])]
 
-    return base.mapInPandas(gen, schema=PAGES_SCHEMA_DDL)
+    return map_rows(base, gen, PAGES_SCHEMA_DDL)

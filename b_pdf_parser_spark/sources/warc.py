@@ -28,12 +28,13 @@ from __future__ import annotations
 import gzip
 import io
 import zlib
-from datetime import datetime, timezone
+from datetime import datetime
 from typing import Iterator, List, Optional, Tuple
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from ..operators import map_rows
 
 __all__ = [
     "warc_record",
@@ -343,6 +344,16 @@ def write_wet(
 WET_ROWS_DDL = "url STRING, warc_ts TIMESTAMP, text STRING"
 
 
+def _record_ts(date: str) -> Optional[datetime]:
+    """A record's WARC-Date as a naive datetime, None if malformed. Kept
+    naive: the writer strftime's the (naive) column value, so the
+    roundtrip is the identity regardless of the Spark session timezone."""
+    try:
+        return datetime.strptime(date, "%Y-%m-%dT%H:%M:%SZ")
+    except ValueError:
+        return None
+
+
 def read_wet(spark, path_glob: str) -> DataFrame:
     """Scan ``.warc.wet(.gz)`` segments into (url, warc_ts, text) rows —
     the extracted-text twin of :func:`read_warc`."""
@@ -351,23 +362,14 @@ def read_wet(spark, path_glob: str) -> DataFrame:
         .option("pathGlobFilter", "*.wet*")
         .option("recursiveFileLookup", "true")  # hive-style partition dirs
         .load(path_glob)
-        .select("path", "content")
+        .select("content")
     )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            urls, stamps, texts = [], [], []
-            for blob in b["content"]:
-                for url, date, payload in split_wet(bytes(blob)):
-                    urls.append(url)
-                    try:
-                        stamps.append(datetime.strptime(date, "%Y-%m-%dT%H:%M:%SZ"))
-                    except ValueError:
-                        stamps.append(None)
-                    texts.append(payload.decode("utf-8", "replace"))
-            yield pd.DataFrame({"url": urls, "warc_ts": stamps, "text": texts})
+    def parse(blob):
+        for url, date, payload in split_wet(bytes(blob)):
+            yield url, _record_ts(date), payload.decode("utf-8", "replace")
 
-    return files.mapInPandas(parse, schema=WET_ROWS_DDL)
+    return map_rows(files, parse, WET_ROWS_DDL)
 
 
 def read_warc(spark, path_glob: str) -> DataFrame:
@@ -378,23 +380,11 @@ def read_warc(spark, path_glob: str) -> DataFrame:
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.warc*")
         .load(path_glob)
-        .select("path", "content")
+        .select("content")
     )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            urls, stamps, payloads = [], [], []
-            for blob in b["content"]:
-                for url, date, payload in split_warc(bytes(blob)):
-                    urls.append(url)
-                    try:
-                        # kept naive: the writer strftime's the (naive)
-                        # column value, so the roundtrip is the identity
-                        # regardless of the Spark session timezone
-                        stamps.append(datetime.strptime(date, "%Y-%m-%dT%H:%M:%SZ"))
-                    except ValueError:
-                        stamps.append(None)
-                    payloads.append(payload)
-            yield pd.DataFrame({"url": urls, "warc_ts": stamps, "html": payloads})
+    def parse(blob):
+        for url, date, payload in split_warc(bytes(blob)):
+            yield url, _record_ts(date), payload
 
-    return files.mapInPandas(parse, schema=WARC_ROWS_DDL)
+    return map_rows(files, parse, WARC_ROWS_DDL)

@@ -7,12 +7,14 @@
 * the extraction pipeline has exactly its two intended exchanges
   (small-side hash repartition + big-side round-robin), nothing hidden
 * filters on the pages source push into the scan
+* queries built on per-row kernels keep their MapInPandas/Exchange counts
 """
 
 import pyspark.sql.functions as F
 import pytest
 
 import __spark_entry__ as entry
+from test_entry_oracle import SF_DIR  # the scale the oracle parity runs at
 
 ALL_Q = {**entry.queries(), **entry.extra_queries()}
 
@@ -126,3 +128,46 @@ def test_host_cap_threshold_is_windowless(spark):
     t = _plan(per_host_cap_threshold(df, "doc_id", "host", 3))
     assert "Window" in w
     assert "Window" not in t  # two linear passes, no per-host task
+
+
+# (MapInPandas, Exchange) node counts of every registered query that builds
+# a per-row kernel through operators.map_rows, as planned before those
+# kernels shared the helper: moving a kernel onto it adds no Python round
+# trip and no shuffle. Subtrees behind a localCheckpoint do not show here.
+KERNEL_PLAN_SHAPES = {
+    "extract_formula": (2, 2),
+    "extract_formula_html": (2, 2),
+    "extract_kinds": (2, 1),
+    "extract_transactions": (2, 1),
+    "extract_verify_relational": (0, 2),
+    "extract_strategy_stats": (2, 2),
+    "extract_corpus_audit": (1, 2),
+    "pdf_images": (2, 0),
+    "pdf_outlinks": (2, 0),
+    "real_media_decode": (2, 0),
+    "pdf_ccitt_decode": (2, 0),
+    "outlinks": (2, 0),
+    "host_pagerank": (0, 29),
+    "crawl_schedule": (0, 35),
+    "crawl_frontier": (4, 2),
+    "near_dup_pairs": (0, 4),
+    "near_dup_clusters": (0, 0),
+    "near_dup_keep_best": (0, 3),
+    "dedup_decisions": (0, 4),
+    "simhash_neardup": (0, 4),
+    "winnow_fingerprints": (1, 1),
+    "duplicate_spans": (0, 4),
+    "decontamination": (2, 5),
+    "langid": (1, 0),
+    "gopher_quality": (1, 0),
+    "quality_decisions": (1, 1),
+    "intra_doc_repetition": (1, 1),
+}
+
+
+@pytest.mark.parametrize("name", list(KERNEL_PLAN_SHAPES))
+def test_kernel_query_plan_shape(spark, name):
+    assert name in entry.queries()
+    plan = _plan(ALL_Q[name](spark, SF_DIR))
+    shape = (plan.count("MapInPandas"), plan.count("Exchange"))
+    assert shape == KERNEL_PLAN_SHAPES[name]
